@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-EMBEDDING_DIM = 64  # the testdata embeddings fixture (FIXTURES.md)
-
 
 def dot(a: Column, b: Column) -> Column:
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))

@@ -45,9 +45,9 @@ input is localCheckpoint'ed because rounds+1 passes consume it; at
 petabyte scale swap that for persist(DISK_ONLY) or re-scanning the
 columnar source, whichever the cluster's disk budget prefers.
 
-Production k (measured in tools/kprobe.py, SCALE.md §Production-k
-probe): shuffle rows per round and driver state are k×d — functions of
-(k, d) only, never of corpus size — and wall grows strongly
+Production k (measured in SCALE.md §Production-k probe): shuffle
+rows per round and driver state are k×d — functions of (k, d) only,
+never of corpus size — and wall grows strongly
 sub-linearly in k (×1.4–2.3 for k×32 at sf0.1) because the O(n·k·d)
 assignment arithmetic is one vectorized Arrow pass. Closure size is
 k·d·8 B; past k ≈ tens of thousands (SemDeDup's 50k: ~26 MB) ship the

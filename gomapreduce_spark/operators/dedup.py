@@ -682,8 +682,8 @@ def minhash_lsh_pairs(
     # (~15 MB/bucket at the 1024 default — the capped worst case;
     # disabling the cap shifts mega-bucket pair explosion from the
     # old streaming self-join into these arrays, which is exactly the
-    # configuration the cap forbids; tools/hotcap_probe.py measures
-    # both sides)
+    # configuration the cap forbids; SCALE.md "Hot-cap wall proof"
+    # measures both sides)
     pair_expr = f"""
       flatten(transform(members, (x, i) ->
         transform(slice(members, i + 2, size(members) - i - 1), y ->
@@ -1059,9 +1059,9 @@ def derived_lsh_params(
     base_n: int = LSH_SIZING_BASE_N,
 ) -> tuple[int, int]:
     """The measured LSH sizing rule as a function (round-13 verdict
-    item 3): ``tools/probe_embedding_candidates.py`` proved candidate
-    volume at FIXED planes grows quadratically with corpus size (×100
-    per decade — occupancy N/2^planes is the law), and measured the
+    item 3): the embedding candidate probe (SCALE.md round-13) proved
+    candidate volume at FIXED planes grows quadratically with corpus
+    size (×100 per decade — occupancy N/2^planes is the law), and measured the
     mitigation live at the 10× point: +⌊log2(N/N₀)⌋ planes holds
     expected cell occupancy (and per-vector candidate work) roughly
     constant (candidates ×0.196, wall ×0.6 of the fixed-plane run),
@@ -1089,12 +1089,10 @@ def derived_lsh_params(
 def _embedding_cells(
     emb: DataFrame, n_planes: int, n_tables: int, max_cell: int
 ) -> DataFrame:
-    """The candidate CELL relation :func:`embedding_near_dup` scores —
-    extracted so tools/probe_embedding_candidates.py can measure the
-    exact candidate volume (Σ_cells m·(m−1)/2 + m·p) the operator
-    pays, from the same plan it pays it on. One row per (table,
-    bucket) occupant: the cell's exact members (is_probe = 0) plus its
-    Hamming-1 directional probe visitors (is_probe = 1), with
+    """The candidate CELL relation :func:`embedding_near_dup` scores,
+    whose candidate volume is Σ_cells m·(m−1)/2 + m·p. One row per
+    (table, bucket) occupant: the cell's exact members (is_probe = 0)
+    plus its Hamming-1 directional probe visitors (is_probe = 1), with
     hot cells (> max_cell MEMBERS) dropped and observed."""
     # signatures feed TWO consumers (exact members + probe visitors);
     # materialize once instead of running the matmul pass per branch.
@@ -1198,9 +1196,8 @@ def embedding_near_dup(
 
     100 TB plane scaling — now the DEFAULT, not just a docstring rule
     (round-13 verdict item 3): wall is LINEAR IN CANDIDATES (measured
-    — tools/probe_embedding_candidates.py; SCALE.md "candidate-growth
-    law"), and candidate volume is governed by expected cell occupancy
-    N / 2^n_planes per table. When ``n_planes``/``n_tables`` are left
+    — SCALE.md "candidate-growth law"), and candidate volume is
+    governed by expected cell occupancy N / 2^n_planes per table. When ``n_planes``/``n_tables`` are left
     None, they derive from the OBSERVED table size via
     :func:`derived_lsh_params` — a single cheap ``count()`` job (a
     1-long result, never a data collect; at production the count comes
@@ -1210,9 +1207,8 @@ def embedding_near_dup(
     (every committed fixture SF) the derived params equal the pinned
     6×24 setting — verified to recover 100 % of ≥threshold pairs there
     — so all oracles stay pinned while production corpora
-    automatically get the mitigation. Explicit arguments override (the
-    probe tool pins its own settings). The ``max_cell`` cap stays as
-    the skew backstop either way.
+    automatically get the mitigation. Explicit arguments override.
+    The ``max_cell`` cap stays as the skew backstop either way.
     """
     import numpy as np
     import pandas as pd
@@ -1475,7 +1471,6 @@ def embedding_dedup_clusters(
     )
 
 
-PR_DAMPING = 0.85
 PR_ITERS = 3
 
 

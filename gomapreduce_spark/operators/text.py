@@ -249,6 +249,18 @@ def heavy_hitters_approx(
     return top.withColumn("rk", F.row_number().over(w).cast("long"))
 
 
+def _word_ngrams(tokens: str, n: int) -> Column:
+    """The space-joined word n-grams of the array column ``tokens``, in
+    order: n shifted slices of one token array zipped together. Linear
+    in the token count — no per-element lambda indexing, the
+    O(tokens²) CollapseProject trap shingle_arrays documents."""
+    m = F.size(tokens) - (n - 1)
+    grams = F.slice(tokens, 1, m)
+    for i in range(2, n + 1):
+        grams = F.zip_with(grams, F.slice(tokens, i, m), lambda a, b: F.concat(a, F.lit(" "), b))
+    return grams
+
+
 def bigram_stats(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k adjacent-token bigrams per language — distributed n-gram
     LM statistics (the count table behind KenLM-style estimation).
@@ -262,11 +274,7 @@ def bigram_stats(docs: DataFrame, k: int = 5) -> DataFrame:
     from pyspark.sql import Window as W
 
     t = docs.select("lang", tokenize("text").alias("t")).where(F.size("t") >= 2)
-    bigrams = F.zip_with(
-        F.slice("t", 1, F.size("t") - 1),
-        F.slice("t", 2, F.size("t") - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = _word_ngrams("t", 2)
     counts = (
         t.select("lang", F.explode(bigrams).alias("bigram"))
         .groupBy("lang", "bigram")
@@ -302,11 +310,7 @@ def lm_perplexity(docs: DataFrame) -> DataFrame:
     and the per-doc mean is a second partial agg. Nothing is ever
     collected."""
     t = docs.select("doc_id", "lang", tokenize("text").alias("t")).where(F.size("t") >= 2)
-    bigrams = F.zip_with(
-        F.slice("t", 1, F.size("t") - 1),
-        F.slice("t", 2, F.size("t") - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = _word_ngrams("t", 2)
     occ = t.select("doc_id", "lang", F.explode(bigrams).alias("bigram"))
     lm = occ.groupBy("lang", "bigram").agg(F.count("*").alias("c2"))
     prefix = (
@@ -353,15 +357,7 @@ def boilerplate_spans(docs: DataFrame, n: int = 3, min_docs: int = 4) -> DataFra
     (tests/test_plans.py pins "no mandatory broadcast" on this edge).
     Exact integer counts throughout — hash-stable across engines."""
     t = docs.select("doc_id", tokenize("text").alias("t")).where(F.size("t") >= n)
-    spans = F.zip_with(
-        F.zip_with(
-            F.slice("t", 1, F.size("t") - 2),
-            F.slice("t", 2, F.size("t") - 2),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-        F.slice("t", 3, F.size("t") - 2),
-        lambda ab, c: F.concat(ab, F.lit(" "), c),
-    )
+    spans = _word_ngrams("t", n)
     occ = (
         t.select("doc_id", F.explode(spans).alias("span"))
         .select("doc_id", h64("span").alias("span_h"))
@@ -666,11 +662,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     100 TB the plan is two bounded-fan-in hash aggregations; no window,
     no global sort."""
     t = docs.select("doc_id", tokenize("text").alias("t")).where(F.size("t") >= 2)
-    bigrams = F.zip_with(
-        F.slice("t", 1, F.size("t") - 1),
-        F.slice("t", 2, F.size("t") - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = _word_ngrams("t", 2)
     per_bigram = (
         t.select("doc_id", F.explode(bigrams).alias("bigram"))
         .groupBy("doc_id", "bigram")
@@ -1389,15 +1381,7 @@ def sparse_doc_similarity(docs: DataFrame, max_df: int = 50, top_k: int = 50) ->
     integers once, and the global top-k is a distributed TakeOrdered
     with (sim, doc_a, doc_b) tie-breaks — cross-engine-stable."""
     t = docs.select("doc_id", tokenize("text").alias("t")).where(F.size("t") >= 3)
-    grams = F.zip_with(
-        F.zip_with(
-            F.slice("t", 1, F.size("t") - 2),
-            F.slice("t", 2, F.size("t") - 2),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-        F.slice("t", 3, F.size("t") - 2),
-        lambda ab, c: F.concat(ab, F.lit(" "), c),
-    )
+    grams = _word_ngrams("t", 3)
     tf = (
         t.select("doc_id", F.explode(grams).alias("g"))
         .select("doc_id", h64("g").alias("g_h"))

@@ -695,86 +695,31 @@ def _streaming_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # operator's oracle (assigned after the ORACLES dict below)
 QUERIES["streaming_transition_matrix"] = _streaming_transition_matrix
 
-# Driver-check priority: the driver records CORRECTNESS rows for only
-# the first ~50 entries, so the front of the dict is rebuilt each
-# round. Round 14 executes the round-13 verdict's rotation order
-# (item 1), stalest-first: the ENTIRE 41-query r10-stale block (the
-# only queries whose last driver row is older than r11 after r13) in
-# registration order; then the four round-14 additions
-# (value_deciles_bounds closes the last designed oracle hole with a
-# hash-stable certificate of the LIVE GK merge path;
-# contamination_against_index and knn_against_index are the
-# standing-index production forms; streaming_contamination_filter the
-# streaming decontamination screen); then the three queries whose
-# implementation changed this round (contamination_spans dropped its
-# corpus-sized localCheckpoint for the split-before-tokenize form —
-# values verified unchanged; events_partition_stats moved to the
-# hardened owner-private atomic cache with partition type inference
-# disabled; embedding_near_dup gained the scale-derived
-# n_planes/n_tables default — derived == pinned at every fixture SF,
-# values verified unchanged); then two r11-stale backfills to fill
-# the 50-row budget. After r14 no registered query's last driver row
-# is older than r11. Every entry is still re-verified each round by
-# pytest + tools/check_oracle.py regardless of position.
-_R14_PRIORITY = [
-    # (a) the complete r10-stale pool, registration order
-    'image_dhash_index',
-    'audio_spectral',
-    'event_transition_matrix',
-    'bpe_pair_counts',
-    'sparse_doc_similarity',
-    'scd2_user_state',
-    'merge_upsert_customers',
-    'bpe_learn_merges_distributed',
-    'dedup_recall_audit',
-    'html_boilerplate_strip',
-    'pagerank_dedup_graph',
-    'variant_props_stats',
-    'triangle_stats',
-    'weighted_sample',
-    'ppjoin_pairs',
-    'corpus_snapshot_diff',
-    'dedup_clusters',
-    'q4_late_shipments',
-    'asof_join_orders',
-    'range_join_shipments',
-    'percentile_stats',
-    'topk_per_group',
-    'rollup_revenue',
-    'anti_join_customers',
-    'semi_join_big_spenders',
-    'order_status_pivot',
-    'tumbling_window_counts',
-    'running_totals',
-    'cube_by_type_hour',
-    'funnel_set_ops',
-    'json_props_stats',
-    'latest_event_per_user',
-    'value_deciles',
-    'value_prop_correlation',
-    'trimmed_mean_by_type',
-    'distinct_words',
-    'string_funcs_showcase',
-    'date_funcs_showcase',
-    'salted_user_counts',
-    'streaming_weighted_sample',
-    'streaming_transition_matrix',
-    # (b) NEW in round 14 — no driver row exists yet
-    "value_deciles_bounds",           # live-sketch rank-bound certificate (r13 verdict item 2)
-    "contamination_against_index",    # standing-benchmark index screen (r13 verdict item 4)
-    "knn_against_index",              # ANN served from the persisted IVF+PQ index (r13 verdict item 5)
-    "streaming_contamination_filter", # streaming decontamination screen (r13 verdict item 6)
-    # (c) implementation changed in round 14 (re-row)
-    "contamination_spans",            # r13 (checkpoint-removal refactor)
-    "events_partition_stats",         # r13 (hardened cache + inference off)
-    "embedding_near_dup",             # r13 (scale-derived LSH defaults)
-    # (d) r11-stale backfill to the 50-row budget, registration order
-    'knn_ivf',                        # r11
-    'knn_pq',                         # r11
-]
-_order = [n for n in QUERIES if n not in _R14_PRIORITY]
-_order[0:0] = _R14_PRIORITY
-QUERIES = {k: QUERIES[k] for k in _order}
+# Oracle-check priority: the per-round correctness run checks only the
+# first 50 entries of QUERIES against their oracles, so recently
+# changed paths go first.
+_PRIORITY = (
+    "corpus_ingest_e2e",
+    "corpus_dedup_e2e",
+    "doc_provenance",
+    "canonical_docs",
+    "kmeans_embeddings",
+    "kmeans_incremental",
+    "source_overlap_matrix",
+    "ngram_novelty",
+    "video_scene_cuts",
+    "video_shot_frames",
+    "lpa_communities",
+    "tf_idf",
+    "winnow_fingerprints",
+    "semdedup_prune",
+    "bigram_stats",
+    "lm_perplexity",
+    "repetition_stats",
+    "boilerplate_spans",
+    "sparse_doc_similarity",
+)
+QUERIES = {k: QUERIES[k] for k in _PRIORITY} | QUERIES
 
 
 # ---------------------------------------------------------------------------

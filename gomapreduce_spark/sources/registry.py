@@ -10,7 +10,6 @@ lacks. The same calls take ``s3a://`` URIs unchanged on a real cluster.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,8 +29,6 @@ TABLES = [
     "documents",
     "embeddings",
 ]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def rebalance_small_scan(df: DataFrame, key: str | None = None) -> DataFrame:

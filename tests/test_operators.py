@@ -628,8 +628,7 @@ def test_derived_lsh_params_pin_probe_mitigation_point(spark):
     calibration point — including every committed SF, so the oracles
     stay pinned by construction — and (b) reproduce the probe's
     MEASURED mitigation setting at the 10× point: 9 planes / 48 tables
-    (tools/probe_embedding_candidates.py: candidates ×0.196, recall
-    99.6 % — SCALE.md round-13)."""
+    (candidates ×0.196, recall 99.6 % — SCALE.md round-13)."""
     import pyarrow.parquet as pq
 
     from gomapreduce_spark.operators.dedup import (

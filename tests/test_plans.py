@@ -18,6 +18,20 @@ def test_physical_plans(spark, sf_med):
     assert not bad, f"plan regressions: {bad}"
 
 
+def test_source_overlap_shingle_pass_is_one_arrow_pass(spark, sf_med):
+    """source_overlap_matrix's gate sees only the plan after its
+    checkpoint; the shingle pass before the cut must stay ONE narrow
+    Arrow pass."""
+    import re
+
+    from gomapreduce_spark.operators.dedup import shingle_arrays
+    from gomapreduce_spark.sources.registry import load_table
+    from tools.explain_audit import plan_str
+
+    plan = plan_str(shingle_arrays(load_table(spark, sf_med, "documents")))
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
+
+
 def test_aqe_splits_skewed_join(spark):
     """The 100 TB skew story is AQE's OptimizeSkewedJoin, not manual
     salting alone: with a pathologically hot key and test-scale

@@ -847,16 +847,19 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
         "max_single_partition": 2,
     },
-    # source-overlap matrix: ONE shingle Arrow pass; the per-source
-    # shingle set is a two-phase distinct; the overlap self-join keys
-    # on the shingle hash (fan-out bounded by the catalog-sized source
-    # domain squared — no hot-key cap needed); no hints, no cartesian,
-    # no single-partition stage
+    # source-overlap matrix: the (source, shingle hash) set is
+    # localCheckpointed, so the plan after the cut reads it back as
+    # Scan ExistingRDD and holds no Python stage (the one shingle
+    # Arrow pass sits before the cut; tests/test_plans.py pins it on
+    # shingle_arrays' own plan). The overlap self-join keys on the
+    # shingle hash (fan-out bounded by the catalog-sized source domain
+    # squared — no hot-key cap needed); no hints, no cartesian, no
+    # single-partition stage
     "source_overlap_matrix": {
-        "require": ["MapInPandas"],
+        "require": ["Scan ExistingRDD"],
         "partial_agg": True,
         "forbid_scaling_hints": True,
-        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
+        "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin", "InPandas"],
         "max_single_partition": 0,
     },
     # Monroe log-odds: one tokenize scan feeds every count layer
@@ -990,24 +993,28 @@ AUDITS: dict[str, dict] = {
     # aggregates; the ONLY nested loop allowed is the blessed 1-row
     # broadcast stack source (verified by the static-bound check the
     # scaling-hint audit applies), so forbid cartesian + Python paths
-    # and require the final stack Generate
-    # scan budget = 3 honest passes (exact-dedup hash groupBy, the
-    # survivor-side re-read, the input-total count)
+    # and require the final stack Generate.
+    # The (doc_id, content_hash, quality) pre-pass is localCheckpointed
+    # and the cluster labels arrive as a built relation, so both read
+    # back as Scan ExistingRDD; exact dedup groups the checkpointed
+    # hash. The one parquet scan left is the input-total count(*),
+    # pruned to doc_id
     "corpus_dedup_e2e": {
-        "max_scans": 3,
+        "max_scans": 1,
         "require": ["Generate"],
         "forbid": ["CartesianProduct", "InPandas", "EvalPython"],
         "forbid_scaling_hints": True,
     },
-    # -- round-12: full-pipeline ingest certification --
-    # admission flags (blocklist + gopher + quality, all row-level)
-    # are localCheckpointed — paid once, ~10 bytes/doc — so the
-    # visible plan's parquet scans are the 4 honest dedup-tail passes
-    # (admitted join, exact-dedup hash groupBy, survivor re-read, the
-    # canonical_docs quality/LSH subtree); certification layer is two
-    # 1-row aggregates + the blessed 1-row broadcast stack source
+    # -- full-pipeline ingest certification --
+    # one localCheckpointed flag relation (doc_id, the three row-level
+    # admission flags, content_hash, quality) feeds the admission
+    # counts, the exact-dedup groupBy and canonical_docs' quality; the
+    # cluster labels arrive as a built relation. Every input therefore
+    # reads back as Scan ExistingRDD and the visible plan scans no
+    # parquet at all; certification layer is two 1-row aggregates +
+    # the blessed 1-row broadcast stack source
     "corpus_ingest_e2e": {
-        "max_scans": 4,
+        "max_scans": 0,
         "require": ["Generate"],
         "forbid": ["CartesianProduct", "InPandas", "EvalPython"],
         "forbid_scaling_hints": True,

@@ -1,10 +1,11 @@
 """Per-job/per-stage profile of one registered query at bench scale.
 
 Runs the named queries exactly as bench.py does (noop sink, warm
-session) with the Spark event log enabled, then parses the log into a
-per-job breakdown: wall, stage count, task count, and the job group /
-description — the local[32] stand-in for the Spark UI's Jobs page
-(guide §1.1/§7.1; the UI server is disabled in this sandbox).
+session) with the Spark event log enabled, then folds the log with
+``perfbench.eventlog.SparkLog`` into a per-job breakdown: wall, call
+site, and each stage's wall and task count — the local[32] stand-in
+for the Spark UI's Jobs page (guide §1.1/§7.1; session.get_spark
+disables the UI server).
 
 Usage: python tools/profile_query.py <query> [query ...]
        SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py
@@ -12,8 +13,8 @@ Usage: python tools/profile_query.py <query> [query ...]
 
 from __future__ import annotations
 
-import json
 import os
+import shlex
 import shutil
 import sys
 import tempfile
@@ -21,35 +22,25 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.eventlog import SparkLog  # noqa: E402
+
 
 def main() -> None:
     names = sys.argv[1:]
     assert names, "usage: profile_query.py <query> [query ...]"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     evdir = tempfile.mkdtemp(prefix="spark_events_")
+    # event-log confs are static: they reach the JVM only at launch
+    confs = {"spark.eventLog.enabled": "true", "spark.eventLog.dir": evdir,
+             "spark.eventLog.compress": "false"}
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [shlex.quote(f"--conf={k}={v}") for k, v in confs.items()] + ["pyspark-shell"])
 
-    from pyspark.sql import SparkSession
-
-    from gomapreduce_spark.session import RUNTIME_CONFS, default_cpus
     from gomapreduce_spark.queries import QUERIES
-    from tools.timing import warm
+    from gomapreduce_spark.session import get_spark
+    from tools.timing import run_noop, warm
 
-    cpus = default_cpus()
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     warm(QUERIES, spark, sf_dir)
 
@@ -58,67 +49,25 @@ def main() -> None:
         for rep in (1, 2):  # rep2 is the warm run — read that one
             sc.setJobGroup(f"{name}#r{rep}", name)
             t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            print(f"=== {name} rep{rep}: {wall:.3f}s total ===")
+            run_noop(QUERIES, name, spark, sf_dir)
+            print(f"=== {name} rep{rep}: {time.time() - t0:.3f}s total ===")
     spark.stop()
 
-    # parse the single application event log (rolling dir on Spark 4)
-    logs = []
-    for root, _dirs, files in os.walk(evdir):
-        logs += [
-            os.path.join(root, f)
-            for f in files
-            if "events" in f or f.startswith("eventlog") or f.startswith("local-")
-        ]
-    assert logs, f"no event log under {evdir}"
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    # parse EVERY log file (sorted): with rolling event logs Spark
-    # splits one application across files, and reading only the first
-    # silently drops later jobs from the profile
-    def _lines():
-        for path in sorted(logs):
-            with open(path) as fh:
-                yield from fh
-
-    for line in _lines():
-        ev = json.loads(line)
-        et = ev.get("Event")
-        if et == "SparkListenerJobStart":
-            props = ev.get("Properties") or {}
-            jobs[ev["Job ID"]] = {
-                "t0": ev["Submission Time"],
-                "group": props.get("spark.jobGroup.id", ""),
-                "desc": (props.get("spark.job.description") or "")[:90],
-                "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-            }
-        elif et == "SparkListenerJobEnd":
-            if ev["Job ID"] in jobs:
-                jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
-        elif et == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            stages[si["Stage ID"]] = {
-                "name": si["Stage Name"].split("\n")[0][:70],
-                "tasks": si["Number of Tasks"],
-                "wall": (si.get("Completion Time", 0) - si.get("Submission Time", 0))
-                / 1000.0,
-            }
+    log = SparkLog(evdir)
     by_group: dict[str, list] = {}
-    for jid in sorted(jobs):
-        j = jobs[jid]
-        by_group.setdefault(j["group"], []).append((jid, j))
-    for group, js in by_group.items():
+    for jid in sorted(log.jobs):
+        by_group.setdefault(log.jobs[jid].group, []).append(log.jobs[jid])
+    for group, jobs in by_group.items():
         if group.split("#")[0] not in names:
             continue
-        print(f"\n##### {group} — {len(js)} jobs")
-        for jid, j in js:
-            w = (j.get("t1", j["t0"]) - j["t0"]) / 1000.0
-            print(f"  job {jid:>3}  {w:7.3f}s  desc={j['desc']}")
-            for sid in sorted(j["stages"]):
-                s = stages.get(sid)
-                if s:
-                    print(f"        stage {sid:>3} {s['wall']:7.3f}s {s['tasks']:>3}t  {s['name']}")
+        print(f"\n##### {group} — {len(jobs)} jobs")
+        for j in jobs:
+            wall = f"{j.end_s - j.submit_s:7.3f}s" if j.end_s else "  no end"
+            print(f"  job {j.job_id:>3}  {wall}  {j.call_site[:90]}")
+            for (sid, _), st in sorted(log.stages.items()):
+                if st.job_id == j.job_id and st.end_s:
+                    tasks = int(st.counters["tasks"])
+                    print(f"        stage {sid:>3} {st.end_s - st.submit_s:7.3f}s {tasks:>3}t")
     shutil.rmtree(evdir, ignore_errors=True)
 
 
