@@ -2,57 +2,8 @@
 
 Source: tools/gen_bpe_oracle.py (independent reference,
 self-checked against the live pipelines at generation time).
-Primary constants below are the GENERATED_SF_DIR tables; every
-committed SF has its own tables in EXPECTED_BY_SF so the tri-SF
-sweep hash-verifies instead of degrading to rows-only.
+Every committed SF has its own tables in EXPECTED_BY_SF.
 """
-
-GENERATED_SF_DIR = '/root/testdata/sf0.01'
-
-BPE_MERGES_EXPECTED_SQL = '''
-SELECT v.rank::BIGINT AS rank, v.l AS "left", v.r AS "right",
-       v.pair_count::BIGINT AS pair_count
-FROM (VALUES
-  (1, 'e', 'r', 4568),
-  (2, 'e', '</w>', 4473),
-  (3, 'n', '</w>', 2834),
-  (4, 'er', '</w>', 2779),
-  (5, 'o', 'w', 2747),
-  (6, 'ow', '</w>', 2747),
-  (7, 'o', 'r', 2696),
-  (8, 's', 't', 2676),
-  (9, 'h', '</w>', 1884),
-  (10, 'a', 't', 1845),
-  (11, 'l', 'u', 1831),
-  (12, 'i', 'n', 1796),
-  (13, 'a', '</w>', 1788),
-  (14, 'g', '</w>', 1777),
-  (15, 'y', '</w>', 1767),
-  (16, 'a', 'r', 1758),
-  (17, 'p', 'ar', 1758),
-  (18, 't', '</w>', 1750),
-  (19, 'i', 'n</w>', 964),
-  (20, 'j', 'o', 964),
-  (21, 'jo', 'in</w>', 964),
-  (22, 'a', 's', 947),
-  (23, 'as', 'h</w>', 947),
-  (24, 'h', 'ash</w>', 947)
-) AS v(rank, l, r, pair_count)
-'''
-
-BPE_ENCODE_EXPECTED_SQL = '''
-SELECT v.lang AS lang, v.n_words::BIGINT AS n_words,
-       v.n_tokens::BIGINT AS n_tokens,
-       v.n_single::BIGINT AS n_single_token_words,
-       v.fertility::DOUBLE AS fertility
-FROM (VALUES
-  ('de', 3549, 13067, 383, 3.681882),
-  ('en', 11757, 43315, 1234, 3.684188),
-  ('es', 3958, 14677, 391, 3.708186),
-  ('fr', 3758, 13949, 366, 3.711815),
-  ('zh', 4143, 15459, 417, 3.731354)
-) AS v(lang, n_words, n_tokens, n_single, fertility)
-'''
 
 EXPECTED_BY_SF = {
     '/root/testdata/sf0.001': {

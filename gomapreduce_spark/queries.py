@@ -15,29 +15,22 @@ rows-only check by design:
     literal oracle would be flaky by construction; dual-bound tests —
     absolute sketch error AND per-decile agreement bands vs the exact
     ntile twin — are the compensating check)
-approx_distinct_users graduated in round 8: HLL++ registers max-merge
-(commutative/associative/idempotent), so unlike GK the sketch is a
-pure function of the input set and tools/gen_hll_oracle.py precomputes
-its VALUES oracle from a pure-python xxHash64 + HLL++ restatement.
 
-knn_ivf / knn_pq / knn_ivf_pq ARE hash-oracled (round 7): every stage
-is deterministic (fixed md5-seeded training, stable argsort ties,
-first-match argmax), so tools/gen_ann_oracle.py precomputes their
-expected output from an INDEPENDENT numpy restatement of the published
-algorithms into VALUES tables (ann_expected.py), self-checked against
-the live pipelines at generation time. heavy_hitters_approx is
-hash-oracled against the EXACT top-k SQL: its head is provably exact
-whenever every reported token survives each partition's local top-m
-(asserted by tests on the fixtures), so the exact oracle doubles as a
-live proof of head-exactness at the driver's check SF.
-
-image_dhash_index and audio_spectral ARE hash-oracled despite being
-non-SQL codec/FFT work: the pipelines are deterministic functions of
-documents.text, so their expected outputs are precomputed into DuckDB
-VALUES tables by an independent numpy reference
-(tools/gen_codec_oracle.py, self-checked at generation; committed as
-codec_expected.py) — on top of the exact-reference + planted-near-dup
-codec tests in tests/test_multimodal_codecs.py.
+The deterministic non-SQL pipelines ARE hash-oracled: image_dhash_index,
+audio_spectral, video_scene_cuts, video_shot_frames, the ANN family
+(knn_lsh, knn_ivf, knn_pq, knn_ivf_pq, knn_against_index), the BPE
+loop, integer k-means, semdedup_prune, approx_distinct_users (HLL++
+registers max-merge, so the sketch is a pure function of the input set)
+and value_deciles_approx_seq (the repartition(1) GK twin). Their
+expected outputs are VALUES tables that tools/gen_*_oracle.py computes
+per SF from an independent reference and self-checks against the live
+pipeline; they live in the generated ``*_expected.py`` modules and are
+read in one place (PRECOMPUTED_ORACLE_SQL_BY_SF below).
+heavy_hitters_approx is hash-oracled against the EXACT top-k SQL: its
+head is provably exact whenever every reported token survives each
+partition's local top-m (asserted by tests on the fixtures), so the
+exact oracle doubles as a live proof of head-exactness at the driver's
+check SF.
 
 Every streaming query IS hash-oracled: on a finite availableNow replay
 the streaming results are deterministic functions of the input (windows,
@@ -53,6 +46,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import (
+    ann_expected,
+    bpe_expected,
+    codec_expected,
+    hll_expected,
+    kmeans_expected,
+    vda_expected,
+    video_expected,
+)
 from .functions.skew import salted_counts
 from .operators import (
     clustering,
@@ -2783,72 +2785,6 @@ ORACLES["bloom_decontamination"] = """
     LEFT JOIN hits h ON h.doc_id = d.doc_id
 """
 
-# Codec-pipeline oracles: deterministic numpy codec/FFT work is not
-# SQL-expressible, but its expected output at the driver's check SF is
-# — precomputed VALUES tables from an independent reference
-# (tools/gen_codec_oracle.py; self-checked against the live pipeline
-# at generation time and filtered through the documents view so subset
-# SFs still compare correctly).
-from .codec_expected import AUDIO_SPECTRAL_EXPECTED_SQL, DHASH_EXPECTED_SQL
-from .video_expected import (
-    VIDEO_SCENE_CUTS_EXPECTED_SQL,
-    VIDEO_SHOT_FRAMES_EXPECTED_SQL,
-)
-
-ORACLES["image_dhash_index"] = DHASH_EXPECTED_SQL
-ORACLES["audio_spectral"] = AUDIO_SPECTRAL_EXPECTED_SQL
-ORACLES["video_scene_cuts"] = VIDEO_SCENE_CUTS_EXPECTED_SQL
-ORACLES["video_shot_frames"] = VIDEO_SHOT_FRAMES_EXPECTED_SQL
-
-# ANN oracles (round 7): same mechanism as the codec oracles — the
-# knn_ivf/knn_pq/knn_ivf_pq pipelines are deterministic end-to-end, so
-# tools/gen_ann_oracle.py precomputes their expected rows from an
-# independent numpy reference (self-checked at generation time).
-from .ann_expected import (
-    GENERATED_SF_DIR as _ANN_SF,
-    KNN_IVF_EXPECTED_SQL,
-    KNN_IVF_PQ_EXPECTED_SQL,
-    KNN_LSH_EXPECTED_SQL,
-    KNN_PQ_EXPECTED_SQL,
-)
-
-ORACLES["knn_lsh"] = KNN_LSH_EXPECTED_SQL
-ORACLES["knn_ivf"] = KNN_IVF_EXPECTED_SQL
-ORACLES["knn_pq"] = KNN_PQ_EXPECTED_SQL
-ORACLES["knn_ivf_pq"] = KNN_IVF_PQ_EXPECTED_SQL
-# the standing-index form is operation-identical to knn_ivf_pq (same
-# training sample, matmuls, tie rules — only the storage of the model
-# and lists differs), so it shares the independent VALUES oracle
-ORACLES["knn_against_index"] = KNN_IVF_PQ_EXPECTED_SQL
-
-# HLL++ oracle (round 8): HLL registers are MAX-merged (commutative,
-# associative, idempotent), so approx_count_distinct is a pure function
-# of the input SET — partitioning-independent, unlike GK quantile
-# sketches. tools/gen_hll_oracle.py restates xxHash64 + HLL++ linear
-# counting in pure python (self-checked at generation time).
-from .hll_expected import (
-    APPROX_DISTINCT_USERS_SQL,
-    GENERATED_SF_DIR as _HLL_SF,
-)
-
-ORACLES["approx_distinct_users"] = APPROX_DISTINCT_USERS_SQL
-
-# GK decile oracle (round 9): the repartition(1) twin of
-# value_deciles_approx runs exactly one partial sketch whose only
-# head-buffer flush SORTS first, so its output is a pure function of
-# the value multiset at any SF that fits the 50k head buffer.
-# tools/gen_vda_oracle.py restates Greenwald-Khanna under Spark's
-# scheduling in pure python (merge/query rules pinned by live probes;
-# self-checked at generation time). The registered scale form stays
-# rows-only BY DESIGN — multi-sketch GK merges are
-# shuffle-arrival-order-dependent.
-from .vda_expected import (
-    GENERATED_SF_DIR as _VDA_SF,
-    VALUE_DECILES_APPROX_SEQ_SQL,
-)
-
-ORACLES["value_deciles_approx_seq"] = VALUE_DECILES_APPROX_SEQ_SQL
-
 # value_deciles_bounds: the oracle RESTATES the GK guarantee the Spark
 # side verifies against the live sketch — n, the certified bound
 # floor(n/accuracy)+2, and within_bound TRUE for all nine deciles. If
@@ -3258,47 +3194,6 @@ ORACLES["events_partition_stats"] = """
 # head-exactness proof at its check SF.
 ORACLES["heavy_hitters_approx"] = ORACLES["heavy_hitters"]
 
-# Precomputed VALUES oracles are literals generated at ONE scale
-# factor; comparing them at any other SF is meaningless (the advisor's
-# round-6 finding: a subset-id guard only saves id-subset SFs). Check
-# tooling consults this map and SKIPS the value compare (rows-only)
-# when the SF under check differs from the generation SF.
-from .codec_expected import GENERATED_SF_DIR as _CODEC_SF
-from .video_expected import GENERATED_SF_DIR as _VIDEO_SF
-
-# BPE oracles: the iterative merge loop is not SQL-expressible; the
-# expected tables come from tools/gen_bpe_oracle.py (independent
-# reference, self-checked), valid at the generation SF only.
-from .bpe_expected import (
-    GENERATED_SF_DIR as _BPE_SF,
-    BPE_ENCODE_EXPECTED_SQL,
-    BPE_MERGES_EXPECTED_SQL,
-)
-
-ORACLES["bpe_learn_merges"] = BPE_MERGES_EXPECTED_SQL
-ORACLES["bpe_encode_stats"] = BPE_ENCODE_EXPECTED_SQL
-# the distributed escape hatch is bit-exact with the driver loop
-# (tests/test_bpe_fidelity.py), so it shares the same independent
-# VALUES oracle, truncated to its registered merge depth
-ORACLES["bpe_learn_merges_distributed"] = (
-    f"SELECT * FROM ({BPE_MERGES_EXPECTED_SQL}) WHERE rank <= 8"
-)
-
-# k-means oracle (round 7): the integer-exact Lloyd loop of
-# operators/clustering.py is deterministic end-to-end, so
-# tools/gen_kmeans_oracle.py precomputes its per-cluster summary from
-# an independent numpy restatement (self-checked at generation time).
-from .kmeans_expected import (
-    GENERATED_SF_DIR as _KMEANS_SF,
-    KMEANS_EXPECTED_SQL,
-    KMEANS_INCR_EXPECTED_SQL,
-    SEMDEDUP_EXPECTED_SQL,
-)
-
-ORACLES["kmeans_embeddings"] = KMEANS_EXPECTED_SQL
-ORACLES["semdedup_prune"] = SEMDEDUP_EXPECTED_SQL
-ORACLES["kmeans_incremental"] = KMEANS_INCR_EXPECTED_SQL
-
 # volume_anomalies: mad_outliers' exact-quantile convention applied
 # to daily volumes (quantile_cont == Spark percentile interpolation).
 ORACLES["volume_anomalies"] = """
@@ -3640,66 +3535,44 @@ ORACLES["embedding_drift"] = """
     FROM stats s JOIN top t ON t.label = s.label AND t.rk = 1
 """
 
-PRECOMPUTED_ORACLE_SF = {
-    "bpe_learn_merges": _BPE_SF,
-    "bpe_learn_merges_distributed": _BPE_SF,
-    "bpe_encode_stats": _BPE_SF,
-    "kmeans_embeddings": _KMEANS_SF,
-    "semdedup_prune": _KMEANS_SF,
-    "kmeans_incremental": _KMEANS_SF,
-    "image_dhash_index": _CODEC_SF,
-    "audio_spectral": _CODEC_SF,
-    "video_scene_cuts": _VIDEO_SF,
-    "video_shot_frames": _VIDEO_SF,
-    "knn_lsh": _ANN_SF,
-    "knn_ivf": _ANN_SF,
-    "knn_pq": _ANN_SF,
-    "knn_ivf_pq": _ANN_SF,
-    "knn_against_index": _ANN_SF,
-    "approx_distinct_users": _HLL_SF,
-    "value_deciles_approx_seq": _VDA_SF,
-}
-
-# Round-11 (r10 verdict item 6): each generator now emits expected
-# tables for EVERY committed SF (EXPECTED_BY_SF), so check tooling can
-# hash-verify the precomputed-oracle queries at sf0.001/sf0.1 too
-# instead of degrading to rows-only. ORACLES itself stays the
-# PRIMARY-SF (sf0.01) tables — the driver contract runs there. The one
-# intentional hole: value_deciles_approx_seq has no sf0.1 entry (100k
-# values exceed the GK 50k single-flush bound, where even the
-# repartition(1) twin is arrival-order-dependent — see
-# tools/gen_vda_oracle.py), so it stays rows-only at sf0.1 by design.
-PRECOMPUTED_ORACLE_SQL_BY_SF: dict[str, dict[str, str]] = {}
+# Precomputed VALUES oracles: queries whose work SQL cannot express
+# (codec/FFT, video, ANN, the BPE merge loop, integer k-means, HLL++,
+# the single-sketch GK twin) but whose output is a deterministic
+# function of the input are checked against literal tables that
+# tools/gen_*_oracle.py computes from an independent reference and
+# self-checks against the live pipeline (each generator's docstring
+# says why its queries are deterministic). Each literal is valid only
+# at its own SF: PRECOMPUTED_ORACLE_SQL_BY_SF maps query -> {sf_dir:
+# sql}, check tooling compares values only where that SF has an entry
+# (value_deciles_approx_seq has none at sf0.1: 100k values exceed the
+# GK single-flush bound), and ORACLES holds the ORACLE_SF tables, the
+# SF the driver contract checks.
+ORACLE_SF = "/root/testdata/sf0.01"
 
 
-def _load_by_sf() -> None:
-    from . import (
-        ann_expected,
-        bpe_expected,
-        codec_expected,
-        hll_expected,
-        kmeans_expected,
-        vda_expected,
-        video_expected,
-    )
-
+def _precomputed_oracles() -> dict[str, dict[str, str]]:
+    by_query: dict[str, dict[str, str]] = {}
     for mod in (ann_expected, bpe_expected, codec_expected, hll_expected,
                 kmeans_expected, vda_expected, video_expected):
-        for sfd, tabs in getattr(mod, "EXPECTED_BY_SF", {}).items():
-            for qname, sql in tabs.items():
-                PRECOMPUTED_ORACLE_SQL_BY_SF.setdefault(qname, {})[sfd] = sql
+        for sf_dir, tables in mod.EXPECTED_BY_SF.items():
+            for qname, sql in tables.items():
+                by_query.setdefault(qname, {})[sf_dir] = sql
     # the distributed BPE escape hatch is bit-exact with the driver
-    # loop, sharing the merges table truncated to its registered depth
-    for sfd, sql in PRECOMPUTED_ORACLE_SQL_BY_SF.get("bpe_learn_merges", {}).items():
-        PRECOMPUTED_ORACLE_SQL_BY_SF.setdefault("bpe_learn_merges_distributed", {})[sfd] = (
-            f"SELECT * FROM ({sql}) WHERE rank <= 8"
-        )
-    # the standing-index ANN form is bit-equal to knn_ivf_pq at every SF
-    for sfd, sql in PRECOMPUTED_ORACLE_SQL_BY_SF.get("knn_ivf_pq", {}).items():
-        PRECOMPUTED_ORACLE_SQL_BY_SF.setdefault("knn_against_index", {})[sfd] = sql
+    # loop (tests/test_bpe_fidelity.py): the merges table truncated to
+    # its registered depth
+    by_query["bpe_learn_merges_distributed"] = {
+        sf_dir: f"SELECT * FROM ({sql}) WHERE rank <= 8"
+        for sf_dir, sql in by_query["bpe_learn_merges"].items()
+    }
+    # the standing-index form is operation-identical to knn_ivf_pq
+    # (same training sample, matmuls, tie rules; only storage differs)
+    by_query["knn_against_index"] = dict(by_query["knn_ivf_pq"])
+    return by_query
 
 
-_load_by_sf()
+PRECOMPUTED_ORACLE_SQL_BY_SF = _precomputed_oracles()
+PRECOMPUTED_ORACLE_SF = dict.fromkeys(PRECOMPUTED_ORACLE_SQL_BY_SF, ORACLE_SF)
+ORACLES.update({q: by_sf[ORACLE_SF] for q, by_sf in PRECOMPUTED_ORACLE_SQL_BY_SF.items()})
 
 # -- round-6 additions ------------------------------------------------
 

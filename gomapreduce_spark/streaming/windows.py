@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,38 +106,42 @@ def _read_events_stream(
 # parallelism (32) made that fixed cost dominate replay wall-clock —
 # measured on the sf0.1 LEFT OUTER interval join: 13.7 s at 32
 # partitions vs 2.8 s at 8, identical results. At production scale the
-# knob goes UP with state volume (each partition's state must fit its
-# executor), not with core count.
-STREAM_STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+# count goes UP with state volume (each partition's state must fit its
+# executor), not with core count; the sweep behind 8 is in SCALE.md.
+STREAM_STATE_PARTITIONS = 8
 
 
-def _run_to_memory(agg: DataFrame, mode: str) -> DataFrame:
-    """Drive a streaming aggregation over a static source to completion
-    synchronously; return the materialized result table.
-
-    ``spark.sql.shuffle.partitions`` is scoped to
-    STREAM_STATE_PARTITIONS for the query (the conf is read at query
-    START) and restored afterwards — stateful partition count is a
-    state-volume knob, not a core-count knob (see above)."""
-    spark = agg.sparkSession
+@contextmanager
+def _state_partitions(spark: SparkSession):
+    """Scope ``spark.sql.shuffle.partitions`` to STREAM_STATE_PARTITIONS
+    while a stateful query starts (the conf is read at query START and
+    frozen into its checkpoint), restoring the session value after."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, str(STREAM_STATE_PARTITIONS))
     try:
-        name = "s" + uuid.uuid4().hex[:12]
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        yield
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def _run_to_memory(agg: DataFrame, mode: str) -> DataFrame:
+    """Drive a streaming aggregation over a static source to completion
+    synchronously, under _state_partitions; return the materialized
+    result table."""
+    name = "s" + uuid.uuid4().hex[:12]
+    with _state_partitions(agg.sparkSession):
+        (
+            agg.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     return agg.sparkSession.table(name)
 
 
@@ -497,28 +502,18 @@ def streaming_upsert_counts(
             .parquet(out_dir)
         )
 
-    # same state-partition scoping as _run_to_memory: the windowed agg
-    # keeps one state store per shuffle partition, and the partition
-    # count freezes into the checkpoint — starting it at the session's
-    # batch parallelism (32) pays 32 snapshot/commit cycles per
-    # micro-batch forever (the 13.7s-vs-2.8s module-header measurement)
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(STREAM_STATE_PARTITIONS))
-    try:
-        q = (
+    # the partition count freezes into the checkpoint: starting at the
+    # session's batch parallelism (32) would pay 32 snapshot/commit
+    # cycles per micro-batch forever (the module-header measurement)
+    with _state_partitions(spark):
+        (
             agg.writeStream.foreachBatch(upsert if wrap_batch is None else wrap_batch(upsert))
             .outputMode("update")
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def streaming_gopher_filter(spark: SparkSession, docs_path: str) -> DataFrame:

@@ -23,3 +23,45 @@ def test_tool_imports_without_spark(path):
     before = SparkContext._active_spark_context
     importlib.import_module("tools." + os.path.basename(path)[: -len(".py")])
     assert SparkContext._active_spark_context is before
+
+
+_PKG_DIR = os.path.join(os.path.dirname(_TOOLS_DIR), "gomapreduce_spark")
+
+
+@pytest.mark.parametrize(
+    "path", sorted(glob.glob(os.path.join(_PKG_DIR, "*_expected.py"))), ids=os.path.basename
+)
+def test_expected_module_defines_only_expected_by_sf(path):
+    mod = importlib.import_module("gomapreduce_spark." + os.path.basename(path)[: -len(".py")])
+    assert [n for n in vars(mod) if not n.startswith("_")] == ["EXPECTED_BY_SF"]
+
+
+def test_precomputed_oracles_are_the_oracle_sf_tables():
+    from gomapreduce_spark.queries import (
+        ORACLE_SF,
+        ORACLES,
+        PRECOMPUTED_ORACLE_SF,
+        PRECOMPUTED_ORACLE_SQL_BY_SF,
+        QUERIES,
+    )
+
+    assert PRECOMPUTED_ORACLE_SQL_BY_SF
+    for q, by_sf in PRECOMPUTED_ORACLE_SQL_BY_SF.items():
+        assert q in QUERIES, q
+        assert ORACLES[q] is by_sf[ORACLE_SF], q
+    assert set(PRECOMPUTED_ORACLE_SF) == set(PRECOMPUTED_ORACLE_SQL_BY_SF)
+
+
+def test_oracle_writer_round_trips():
+    from tools.gen_common import render
+
+    by_sf = {
+        "/data/sf1": {"a": "\n    SELECT 1 AS x\n", "b": "SELECT 'it''s' AS s"},
+        "/data/sf2": {"a": "\nSELECT \"q\" FROM (VALUES\n  (1, '')\n) AS v(q)\n"},
+    }
+    ns: dict = {}
+    exec(render("Doc.\n", by_sf), ns)
+    assert ns["__doc__"] == "Doc.\n"
+    assert ns["EXPECTED_BY_SF"] == by_sf
+    with pytest.raises(AssertionError):
+        render("Doc.\n", {"/data/sf1": {"a": "SELECT '''' AS s"}})

@@ -97,18 +97,12 @@ def main() -> int:
     for t in ("region nation customer supplier part orders lineitem events documents embeddings").split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
-    from gomapreduce_spark.queries import PRECOMPUTED_ORACLE_SF as PRECOMPUTED_SF
-    from gomapreduce_spark.queries import PRECOMPUTED_ORACLE_SQL_BY_SF as BY_SF
+    from gomapreduce_spark.queries import PRECOMPUTED_ORACLE_SQL_BY_SF
 
-    def _by_sf_sql(name: str) -> str | None:
-        """Per-SF expected-table SQL for a precomputed-oracle query at
-        the SF under check (round-11: generators emit every committed
-        SF, so off-primary checks hash-verify instead of rows-only)."""
-        want = os.path.normpath(SF_DIR)
-        for sfd, sql in BY_SF.get(name, {}).items():
-            if os.path.normpath(sfd) == want:
-                return sql
-        return None
+    precomputed = {
+        q: {os.path.normpath(sf): sql for sf, sql in by_sf.items()}
+        for q, by_sf in PRECOMPUTED_ORACLE_SQL_BY_SF.items()
+    }
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     unknown = ONLY - set(qs)
@@ -119,23 +113,23 @@ def main() -> int:
         if ONLY and name not in ONLY:
             continue
         t0 = time.time()
-        # precomputed VALUES oracles are literals valid only at their
-        # generation SF — elsewhere degrade to rows-only with a reason
-        # instead of hard-failing on stale literals (round-6 advisor)
-        gen_sf = PRECOMPUTED_SF.get(name)
-        sf_mismatch = gen_sf is not None and os.path.normpath(gen_sf) != os.path.normpath(SF_DIR)
-        alt_sql = _by_sf_sql(name) if sf_mismatch else None
+        # a precomputed VALUES literal is valid only at its own SF; with
+        # no table for the SF under check, degrade to rows-only with a
+        # reason instead of hard-failing on a stale literal
+        by_sf = precomputed.get(name)
+        oracle = oracles.get(name) if by_sf is None else by_sf.get(os.path.normpath(SF_DIR))
         try:
             sdf = fn(spark, SF_DIR)
-            if sf_mismatch and alt_sql is None:
+            if by_sf is not None and oracle is None:
                 n = len(sdf.collect())
                 print(
                     f"ok   {name}: rows-only ({n} rows, {time.time()-t0:.1f}s) "
-                    f"[precomputed oracle generated at {gen_sf}, checking {SF_DIR} — value compare skipped]"
+                    f"[precomputed oracle generated at {' and '.join(by_sf)}, checking {SF_DIR}"
+                    " — value compare skipped]"
                 )
                 n_pass += 1
                 continue
-            if name not in oracles:
+            if oracle is None:
                 # collect(), not count(): count() lets Catalyst prune
                 # unprojected columns, so a runtime error inside a column
                 # expression (UDF, cast, divide) would never execute.
@@ -151,7 +145,7 @@ def main() -> int:
             n_fail += 1
             continue
         try:
-            dcols, drows = pandas_rows(con.sql(alt_sql or oracles[name]).fetchdf())
+            dcols, drows = pandas_rows(con.sql(oracle).fetchdf())
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1

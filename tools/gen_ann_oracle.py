@@ -37,11 +37,12 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.gen_common import half_up, write_oracles
 
 # pipeline knobs, restated (asserted against the module before writing)
 DIM = 64
@@ -52,13 +53,6 @@ IVF_NPROBE = 4
 PQ_RERANK = 48
 IVFPQ_NPROBE, IVFPQ_RERANK = 8, 64
 LSH_PLANES, LSH_TABLES = 6, 6  # multi-probe radius 1 (bucket ^ each bit)
-
-
-def half_up6(x: float) -> float:
-    """Spark round(col, 6): HALF_UP over the shortest decimal repr of
-    the double (BigDecimal.valueOf semantics) — 0.0000005 ties round
-    away from zero, unlike np.round."""
-    return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
 def md5_unit(idx: int, dim: int) -> np.ndarray:
@@ -161,16 +155,8 @@ def exact_cos_topk(E: np.ndarray, norms: np.ndarray, ids: np.ndarray, qi: int, c
     indices, ranked — sims via the sequential fold + HALF_UP round."""
     q = np.broadcast_to(E[qi], (len(cand), DIM))
     sims = seq_dot(q, E[cand]) / (norms[qi] * norms[cand])
-    rounded = np.array([half_up6(s) for s in sims])
+    rounded = np.array([half_up(s, 6) for s in sims])
     return topk(ids[cand], rounded, k)
-
-
-SF_DIRS = (
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-)
-PRIMARY_SF = "/root/testdata/sf0.01"
 
 
 def build(sf_dir: str, spark) -> dict[str, str]:
@@ -258,12 +244,12 @@ def build(sf_dir: str, spark) -> dict[str, str]:
 
     def values_sql(rows: list[tuple[int, int, float, int]]) -> str:
         return (
-            "SELECT v.query_id::BIGINT AS query_id, v.neighbor_id::BIGINT AS neighbor_id,\n"
+            "\nSELECT v.query_id::BIGINT AS query_id, v.neighbor_id::BIGINT AS neighbor_id,\n"
             "       v.sim::DOUBLE AS sim, v.rk::BIGINT AS rk\n"
             "FROM (VALUES\n"
             + ",\n".join(f"  ({q}, {n}, {s!r}, {r})" for q, n, s, r in rows)
             + "\n) AS v(query_id, neighbor_id, sim, rk)\n"
-            "WHERE v.query_id IN (SELECT vec_id FROM embeddings)"
+            "WHERE v.query_id IN (SELECT vec_id FROM embeddings)\n"
         )
 
     print(
@@ -279,52 +265,22 @@ def build(sf_dir: str, spark) -> dict[str, str]:
 
 
 def main() -> int:
-    from tools.gen_common import reject_retired_sf_dir_arg
-
-    reject_retired_sf_dir_arg()
     import inspect
 
     from gomapreduce_spark.operators import similarity as pipe
-    from gomapreduce_spark.session import get_spark
 
     assert (pipe.IVF_SEED, pipe.IVF_SAMPLE, pipe.IVF_ITERS) == (KM_SEED, KM_SAMPLE, KM_ITERS)
     assert (pipe.PQ_M, pipe.PQ_KSUB, pipe.PQ_ITERS) == (PQ_M, PQ_KSUB, PQ_ITERS)
     lsh_sig = inspect.signature(pipe.knn_lsh).parameters
     assert (lsh_sig["n_planes"].default, lsh_sig["n_tables"].default) == (LSH_PLANES, LSH_TABLES)
-
-    spark = get_spark("gen_ann_oracle", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    by_sf = {sf: build(sf, spark) for sf in SF_DIRS}
-    prim = by_sf[PRIMARY_SF]
-
-    out_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "gomapreduce_spark",
-        "ann_expected.py",
+    write_oracles(
+        "ann",
+        "Precomputed ANN oracles (GENERATED — do not edit).\n\n"
+        "Source: tools/gen_ann_oracle.py (independent numpy reference,\n"
+        "self-checked against the live pipelines at generation time).\n"
+        "Every committed SF has its own tables in EXPECTED_BY_SF.\n",
+        build,
     )
-    with open(out_path, "w") as fh:
-        fh.write(
-            '"""Precomputed ANN oracles (GENERATED — do not edit).\n\n'
-            "Source: tools/gen_ann_oracle.py (independent numpy reference,\n"
-            "self-checked against the live pipelines at generation time).\n"
-            "Primary constants below are the GENERATED_SF_DIR tables; every\n"
-            "committed SF has its own tables in EXPECTED_BY_SF so the tri-SF\n"
-            'sweep hash-verifies instead of degrading to rows-only.\n"""\n\n'
-            f"GENERATED_SF_DIR = {PRIMARY_SF!r}\n\n"
-            f"KNN_LSH_EXPECTED_SQL = '''\n{prim['knn_lsh']}\n'''\n\n"
-            f"KNN_IVF_EXPECTED_SQL = '''\n{prim['knn_ivf']}\n'''\n\n"
-            f"KNN_PQ_EXPECTED_SQL = '''\n{prim['knn_pq']}\n'''\n\n"
-            f"KNN_IVF_PQ_EXPECTED_SQL = '''\n{prim['knn_ivf_pq']}\n'''\n\n"
-            "EXPECTED_BY_SF = {\n"
-            + "".join(
-                f"    {sf!r}: {{\n"
-                + "".join(f"        {k!r}: '''\n{v}\n''',\n" for k, v in tabs.items())
-                + "    },\n"
-                for sf, tabs in by_sf.items()
-            )
-            + "}\n"
-        )
-    print("wrote", out_path)
     return 0
 
 

@@ -22,17 +22,14 @@ from __future__ import annotations
 import os
 import sys
 from collections import Counter
-from decimal import ROUND_HALF_UP, Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.gen_common import half_up, write_oracles
 
 N_MERGES = 24
 TOP_WORDS = 2000
 EOW = "</w>"
-
-
-def half_up6(x: float) -> float:
-    return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
 def learn(freq_head: list[tuple[str, int]]) -> list[tuple[int, str, str, int]]:
@@ -76,14 +73,6 @@ def encode_len(word: str, table: list[tuple[int, str, str, int]], memo: dict) ->
     return len(syms)
 
 
-SF_DIRS = (
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-)
-PRIMARY_SF = "/root/testdata/sf0.01"
-
-
 def build(sf_dir: str, spark) -> dict[str, str]:
     import duckdb
 
@@ -108,7 +97,7 @@ def build(sf_dir: str, spark) -> dict[str, str]:
             acc[1] += n
             acc[2] += 1 if n == 1 else 0
     enc_rows = [
-        (lang, a[0], a[1], a[2], half_up6(a[1] / a[0])) for lang, a in sorted(stats.items())
+        (lang, a[0], a[1], a[2], half_up(a[1] / a[0], 6)) for lang, a in sorted(stats.items())
     ]
 
     # self-check vs the live Spark pipelines
@@ -132,20 +121,20 @@ def build(sf_dir: str, spark) -> dict[str, str]:
         return "'" + s.replace("'", "''") + "'"
 
     merges_sql = (
-        "SELECT v.rank::BIGINT AS rank, v.l AS \"left\", v.r AS \"right\",\n"
+        "\nSELECT v.rank::BIGINT AS rank, v.l AS \"left\", v.r AS \"right\",\n"
         "       v.pair_count::BIGINT AS pair_count\n"
         "FROM (VALUES\n"
         + ",\n".join(f"  ({r}, {q(a)}, {q(b)}, {c})" for r, a, b, c in table)
-        + "\n) AS v(rank, l, r, pair_count)"
+        + "\n) AS v(rank, l, r, pair_count)\n"
     )
     enc_sql = (
-        "SELECT v.lang AS lang, v.n_words::BIGINT AS n_words,\n"
+        "\nSELECT v.lang AS lang, v.n_words::BIGINT AS n_words,\n"
         "       v.n_tokens::BIGINT AS n_tokens,\n"
         "       v.n_single::BIGINT AS n_single_token_words,\n"
         "       v.fertility::DOUBLE AS fertility\n"
         "FROM (VALUES\n"
         + ",\n".join(f"  ({q(l)}, {w}, {t}, {s}, {f!r})" for l, w, t, s, f in enc_rows)
-        + "\n) AS v(lang, n_words, n_tokens, n_single, fertility)"
+        + "\n) AS v(lang, n_words, n_tokens, n_single, fertility)\n"
     )
 
     print(f"built {sf_dir}: {len(table)} merges, {len(enc_rows)} encode rows")
@@ -153,45 +142,17 @@ def build(sf_dir: str, spark) -> dict[str, str]:
 
 
 def main() -> int:
-    from tools.gen_common import reject_retired_sf_dir_arg
-
-    reject_retired_sf_dir_arg()
     from gomapreduce_spark.operators import text as pipe
-    from gomapreduce_spark.session import get_spark
 
     assert (pipe.BPE_N_MERGES, pipe.BPE_TOP_WORDS) == (N_MERGES, TOP_WORDS)
-
-    spark = get_spark("gen_bpe_oracle", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    by_sf = {sf: build(sf, spark) for sf in SF_DIRS}
-    prim = by_sf[PRIMARY_SF]
-
-    out_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "gomapreduce_spark",
-        "bpe_expected.py",
+    write_oracles(
+        "bpe",
+        "Precomputed BPE oracles (GENERATED — do not edit).\n\n"
+        "Source: tools/gen_bpe_oracle.py (independent reference,\n"
+        "self-checked against the live pipelines at generation time).\n"
+        "Every committed SF has its own tables in EXPECTED_BY_SF.\n",
+        build,
     )
-    with open(out_path, "w") as fh:
-        fh.write(
-            '"""Precomputed BPE oracles (GENERATED — do not edit).\n\n'
-            "Source: tools/gen_bpe_oracle.py (independent reference,\n"
-            "self-checked against the live pipelines at generation time).\n"
-            "Primary constants below are the GENERATED_SF_DIR tables; every\n"
-            "committed SF has its own tables in EXPECTED_BY_SF so the tri-SF\n"
-            'sweep hash-verifies instead of degrading to rows-only.\n"""\n\n'
-            f"GENERATED_SF_DIR = {PRIMARY_SF!r}\n\n"
-            f"BPE_MERGES_EXPECTED_SQL = '''\n{prim['bpe_learn_merges']}\n'''\n\n"
-            f"BPE_ENCODE_EXPECTED_SQL = '''\n{prim['bpe_encode_stats']}\n'''\n\n"
-            "EXPECTED_BY_SF = {\n"
-            + "".join(
-                f"    {sf!r}: {{\n"
-                + "".join(f"        {k!r}: '''\n{v}\n''',\n" for k, v in tabs.items())
-                + "    },\n"
-                for sf, tabs in by_sf.items()
-            )
-            + "}\n"
-        )
-    print("wrote", out_path)
     return 0
 
 

@@ -29,6 +29,8 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.gen_common import write_oracles
+
 WIDTH, HEIGHT = 24, 16
 RATE = 16000
 
@@ -80,14 +82,6 @@ def ref_spectral(text: str):
     return n, centroid, rolloff, flatness
 
 
-SF_DIRS = (
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-)
-PRIMARY_SF = "/root/testdata/sf0.01"
-
-
 def build(sf_dir: str, spark) -> dict[str, str]:
     import duckdb
 
@@ -108,15 +102,15 @@ def build(sf_dir: str, spark) -> dict[str, str]:
             audio_rows.append((doc_id, *feats))
 
     dhash_sql = (
-        "SELECT v.doc_id::BIGINT AS doc_id, v.width::INT AS width,\n"
+        "\nSELECT v.doc_id::BIGINT AS doc_id, v.width::INT AS width,\n"
         "       v.height::INT AS height, v.dhash::BIGINT AS dhash\n"
         "FROM (VALUES\n"
         + ",\n".join(f"  ({d}, {w}, {h}, {x})" for d, w, h, x in dhash_rows)
         + "\n) AS v(doc_id, width, height, dhash)\n"
-        "WHERE v.doc_id IN (SELECT doc_id FROM documents)"
+        "WHERE v.doc_id IN (SELECT doc_id FROM documents)\n"
     )
     audio_sql = (
-        "SELECT v.doc_id::BIGINT AS doc_id, v.n_samples::BIGINT AS n_samples,\n"
+        "\nSELECT v.doc_id::BIGINT AS doc_id, v.n_samples::BIGINT AS n_samples,\n"
         "       v.centroid_hz::DOUBLE AS centroid_hz, v.rolloff_hz::DOUBLE AS rolloff_hz,\n"
         "       v.flatness::DOUBLE AS flatness\n"
         "FROM (VALUES\n"
@@ -124,7 +118,7 @@ def build(sf_dir: str, spark) -> dict[str, str]:
             f"  ({d}, {n}, {c!r}, {r!r}, {f!r})" for d, n, c, r, f in audio_rows
         )
         + "\n) AS v(doc_id, n_samples, centroid_hz, rolloff_hz, flatness)\n"
-        "WHERE v.doc_id IN (SELECT doc_id FROM documents)"
+        "WHERE v.doc_id IN (SELECT doc_id FROM documents)\n"
     )
 
     # self-check: the independent reference must agree with the live
@@ -149,44 +143,16 @@ def build(sf_dir: str, spark) -> dict[str, str]:
 
 
 def main() -> int:
-    from tools.gen_common import reject_retired_sf_dir_arg
-
-    reject_retired_sf_dir_arg()
-    from gomapreduce_spark.session import get_spark
-
-    spark = get_spark("gen_codec_oracle", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    by_sf = {sf: build(sf, spark) for sf in SF_DIRS}
-    prim = by_sf[PRIMARY_SF]
-
-    out_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "gomapreduce_spark",
-        "codec_expected.py",
+    write_oracles(
+        "codec",
+        "Precomputed codec-pipeline oracles (GENERATED — do not edit).\n\n"
+        "Source: tools/gen_codec_oracle.py (independent numpy reference,\n"
+        "self-checked against the live pipeline at generation time).\n"
+        "Valid for the deterministic testdata generation seeded per sf;\n"
+        "regenerate if testdata or the synth/codec parameters change.\n"
+        "Every committed SF has its own tables in EXPECTED_BY_SF.\n",
+        build,
     )
-    with open(out_path, "w") as fh:
-        fh.write(
-            '"""Precomputed codec-pipeline oracles (GENERATED — do not edit).\n\n'
-            "Source: tools/gen_codec_oracle.py (independent numpy reference,\n"
-            "self-checked against the live pipeline at generation time).\n"
-            "Valid for the deterministic testdata generation seeded per sf;\n"
-            "regenerate if testdata or the synth/codec parameters change.\n"
-            "Primary constants below are the GENERATED_SF_DIR tables; every\n"
-            "committed SF has its own tables in EXPECTED_BY_SF so the tri-SF\n"
-            'sweep hash-verifies instead of degrading to rows-only.\n"""\n\n'
-            f"GENERATED_SF_DIR = {PRIMARY_SF!r}\n\n"
-            f"DHASH_EXPECTED_SQL = '''\n{prim['image_dhash_index']}\n'''\n\n"
-            f"AUDIO_SPECTRAL_EXPECTED_SQL = '''\n{prim['audio_spectral']}\n'''\n\n"
-            "EXPECTED_BY_SF = {\n"
-            + "".join(
-                f"    {sf!r}: {{\n"
-                + "".join(f"        {k!r}: '''\n{v}\n''',\n" for k, v in tabs.items())
-                + "    },\n"
-                for sf, tabs in by_sf.items()
-            )
-            + "}\n"
-        )
-    print("wrote", out_path)
     return 0
 
 

@@ -21,7 +21,7 @@ generator ASSERTS the estimate lands in the linear-counting regime
 otherwise — the bias-interpolation branch is deliberately not
 restated, so the oracle cannot silently drift onto an unverified path
 at a different SF (check_oracle degrades to rows-only there via
-PRECOMPUTED_ORACLE_SF).
+PRECOMPUTED_ORACLE_SQL_BY_SF).
 
 A self-check compares the generated table against the live Spark
 pipeline and refuses to write on any mismatch.
@@ -37,6 +37,8 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.gen_common import write_oracles
 
 RSD = 0.02  # approx_distinct_users default
 _M64 = (1 << 64) - 1
@@ -107,22 +109,12 @@ def hllpp_estimate(keys: list[int], rsd: float = RSD) -> int:
     return math.floor(h + 0.5)
 
 
-#: all committed fixture SFs; the PRIMARY (driver-facing) generation
-#: SF stays sf0.01 — the others feed EXPECTED_BY_SF so the tri-SF
-#: sweep hash-verifies instead of degrading to rows-only (round-10
-#: verdict item 6)
-SF_DIRS = (
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-)
-PRIMARY_SF = "/root/testdata/sf0.01"
-
-
-def build(sf_dir: str, spark, con) -> str:
+def build(sf_dir: str, spark) -> dict[str, str]:
     """Expected-table SQL for one sf_dir, self-checked against the
     live pipeline (raises on mismatch)."""
-    groups = con.execute(
+    import duckdb
+
+    groups = duckdb.sql(
         f"""
         SELECT event_type, list(DISTINCT user_id) FROM
         read_parquet('{sf_dir}/events.parquet')
@@ -142,46 +134,23 @@ def build(sf_dir: str, spark, con) -> str:
         raise AssertionError(f"SELF-CHECK FAILED at {sf_dir}: live={live} restated={expected}")
     print(f"self-check OK at {sf_dir}:", expected)
     rows = ",\n    ".join(f"('{t}', {n}::BIGINT)" for t, n in expected)
-    return (
-        "\n    SELECT col0 AS event_type, col1 AS approx_users FROM (VALUES\n"
-        f"    {rows}) t\n"
-    )
+    return {
+        "approx_distinct_users": (
+            "\n    SELECT col0 AS event_type, col1 AS approx_users FROM (VALUES\n"
+            f"    {rows}) t\n"
+        )
+    }
 
 
 def main() -> int:
-    from tools.gen_common import reject_retired_sf_dir_arg
-
-    reject_retired_sf_dir_arg()
-    import duckdb
-
-    from gomapreduce_spark.session import get_spark
-
-    con = duckdb.connect()
-    spark = get_spark("gen_hll_oracle", cpus=8)
-    by_sf = {sf: build(sf, spark, con) for sf in SF_DIRS}
-
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "gomapreduce_spark",
-        "hll_expected.py",
+    write_oracles(
+        "hll",
+        "GENERATED by tools/gen_hll_oracle.py — do not edit.\n\n"
+        "Expected approx_distinct_users output at every committed SF from\n"
+        "the independent pure-python xxHash64 + HLL++ restatement (see the\n"
+        "generator docstring), self-checked against the live pipeline per SF.\n",
+        build,
     )
-    with open(out, "w") as f:
-        f.write(
-            '"""GENERATED by tools/gen_hll_oracle.py — do not edit.\n\n'
-            f"Expected approx_distinct_users output at {PRIMARY_SF} (primary;\n"
-            "every committed SF in EXPECTED_BY_SF) from the independent\n"
-            'pure-python xxHash64 + HLL++ restatement (see the generator\n'
-            'docstring), self-checked against the live pipeline per SF.\n"""\n\n'
-            f"GENERATED_SF_DIR = {PRIMARY_SF!r}\n\n"
-            f'APPROX_DISTINCT_USERS_SQL = """{by_sf[PRIMARY_SF]}"""\n\n'
-            "EXPECTED_BY_SF = {\n"
-            + "".join(
-                f'    {sf!r}: {{"approx_distinct_users": """{sql}"""}},\n'
-                for sf, sql in by_sf.items()
-            )
-            + "}\n"
-        )
-    print("wrote", out)
     return 0
 
 

@@ -25,11 +25,12 @@ from __future__ import annotations
 import math
 import os
 import sys
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.gen_common import half_up, write_oracles
 
 # pipeline knobs, restated (asserted against the module before writing)
 KM_K = 8
@@ -38,11 +39,6 @@ KM_SCALE = 1_000_000
 SD_THRESHOLD = 0.4
 SD_MAX_CLUSTER = 4096
 INCR_REFRESH_ROUNDS = 2  # warm-start rounds in kmeans_incremental_update
-
-
-def half_up6(x: float) -> float:
-    """Spark round(col, 6): HALF_UP over the shortest decimal repr."""
-    return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
 def lloyd_rounds(Q: np.ndarray, cents: np.ndarray, rounds: int) -> np.ndarray:
@@ -68,14 +64,6 @@ def lloyd(ids: np.ndarray, Q: np.ndarray, rounds: int = KM_ROUNDS) -> np.ndarray
     while len(cents) < KM_K:
         cents = np.vstack([cents, cents[-1:]])
     return lloyd_rounds(Q, cents, rounds)
-
-
-SF_DIRS = (
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-)
-PRIMARY_SF = "/root/testdata/sf0.01"
 
 
 def build(sf_dir: str, spark) -> dict[str, str]:
@@ -104,11 +92,11 @@ def build(sf_dir: str, spark) -> dict[str, str]:
         labs, cnts = np.unique(labels[mask], return_counts=True)
         best = int(labs[np.argmax(cnts)])  # np.unique sorts labels asc; argmax is first-match
         c_maj = int(cnts[np.argmax(cnts)])
-        inertia = half_up6(float(int(mind2[mask].sum())) / (KM_SCALE * float(KM_SCALE)))
-        c_norm = half_up6(
-            float(math.sqrt(sum(int(v) * int(v) for v in cents[j]))) / KM_SCALE
+        inertia = half_up(float(int(mind2[mask].sum())) / (KM_SCALE * float(KM_SCALE)), 6)
+        c_norm = half_up(
+            float(math.sqrt(sum(int(v) * int(v) for v in cents[j]))) / KM_SCALE, 6
         )
-        out.append((j, n, best, half_up6(c_maj / n), inertia, c_norm))
+        out.append((j, n, best, half_up(c_maj / n, 6), inertia, c_norm))
 
     # kmeans_incremental restatement: base fit on even vec_ids, then
     # INCR_REFRESH_ROUNDS warm-start updates over the full corpus;
@@ -124,10 +112,11 @@ def build(sf_dir: str, spark) -> dict[str, str]:
     for j in sorted(set(int(o) for o in owner_i)):
         mask = owner_i == j
         n = int(mask.sum())
-        inertia = half_up6(float(int(mind2_i[mask].sum())) / (KM_SCALE * float(KM_SCALE)))
-        shift = half_up6(
+        inertia = half_up(float(int(mind2_i[mask].sum())) / (KM_SCALE * float(KM_SCALE)), 6)
+        shift = half_up(
             float(math.sqrt(sum(int(a - b) ** 2 for a, b in zip(new_cents[j], base_cents[j]))))
-            / KM_SCALE
+            / KM_SCALE,
+            6,
         )
         incr_rows.append((j, n, inertia, shift))
 
@@ -157,7 +146,7 @@ def build(sf_dir: str, spark) -> dict[str, str]:
         ]
 
     # self-check vs the LIVE Spark pipelines, cell-for-cell
-    from gomapreduce_spark.queries import QUERIES
+    from gomapreduce_spark.queries import ORACLE_SF, QUERIES
 
     got = sorted(
         (r.cluster_id, r.n_points, r.majority_label, f"{r.purity:.9g}", f"{r.inertia:.9g}", f"{r.c_norm:.9g}")
@@ -191,7 +180,7 @@ def build(sf_dir: str, spark) -> dict[str, str]:
         f"  only-ref:   {[x for x in sd_want if x not in sd_got][:3]}"
     )
     n_pruned = sum(1 for _, _, _, kp in sd_rows if not kp)
-    assert n_pruned > 0 or sf_dir != PRIMARY_SF, (
+    assert n_pruned > 0 or sf_dir != ORACLE_SF, (
         "fixture produced no pruning — threshold too high to exercise the path"
     )
 
@@ -199,30 +188,30 @@ def build(sf_dir: str, spark) -> dict[str, str]:
         f"  ({c}, {n}, {m}, {p!r}, {i!r}, {cn!r})" for c, n, m, p, i, cn in out
     )
     sql = (
-        "SELECT v.cluster_id::BIGINT AS cluster_id, v.n_points::BIGINT AS n_points,\n"
+        "\nSELECT v.cluster_id::BIGINT AS cluster_id, v.n_points::BIGINT AS n_points,\n"
         "       v.majority_label::BIGINT AS majority_label, v.purity::DOUBLE AS purity,\n"
         "       v.inertia::DOUBLE AS inertia, v.c_norm::DOUBLE AS c_norm\n"
         "FROM (VALUES\n" + values + "\n) AS v(cluster_id, n_points, majority_label, purity, inertia, c_norm)\n"
-        "WHERE EXISTS (SELECT 1 FROM embeddings)"
+        "WHERE EXISTS (SELECT 1 FROM embeddings)\n"
     )
     incr_values = ",\n".join(
         f"  ({c}, {n}, {i!r}, {s!r})" for c, n, i, s in incr_rows
     )
     incr_sql = (
-        "SELECT v.cluster_id::BIGINT AS cluster_id, v.n_points::BIGINT AS n_points,\n"
+        "\nSELECT v.cluster_id::BIGINT AS cluster_id, v.n_points::BIGINT AS n_points,\n"
         "       v.inertia::DOUBLE AS inertia, v.shift::DOUBLE AS shift\n"
         "FROM (VALUES\n" + incr_values + "\n) AS v(cluster_id, n_points, inertia, shift)\n"
-        "WHERE EXISTS (SELECT 1 FROM embeddings)"
+        "WHERE EXISTS (SELECT 1 FROM embeddings)\n"
     )
 
     sd_values = ",\n".join(
         f"  ({v}, {c}, {nc}, {str(kp).lower()})" for v, c, nc, kp in sd_rows
     )
     sd_sql = (
-        "SELECT v.vec_id::BIGINT AS vec_id, v.cluster::BIGINT AS cluster,\n"
+        "\nSELECT v.vec_id::BIGINT AS vec_id, v.cluster::BIGINT AS cluster,\n"
         "       v.n_close::BIGINT AS n_close, v.keep::BOOLEAN AS keep\n"
         "FROM (VALUES\n" + sd_values + "\n) AS v(vec_id, cluster, n_close, keep)\n"
-        "WHERE v.vec_id IN (SELECT vec_id FROM embeddings)"
+        "WHERE v.vec_id IN (SELECT vec_id FROM embeddings)\n"
     )
 
     print(
@@ -237,51 +226,22 @@ def build(sf_dir: str, spark) -> dict[str, str]:
 
 
 def main() -> int:
-    from tools.gen_common import reject_retired_sf_dir_arg
-
-    reject_retired_sf_dir_arg()
     import inspect
 
     from gomapreduce_spark.operators import clustering as pipe
-    from gomapreduce_spark.session import get_spark
 
     assert (pipe.KM_K, pipe.KM_ROUNDS, pipe.KM_SCALE) == (KM_K, KM_ROUNDS, KM_SCALE)
     assert (pipe.SEMDEDUP_THRESHOLD, pipe.SEMDEDUP_MAX_CLUSTER) == (SD_THRESHOLD, SD_MAX_CLUSTER)
     incr_sig = inspect.signature(pipe.kmeans_incremental_update).parameters
     assert incr_sig["refresh_rounds"].default == INCR_REFRESH_ROUNDS
-
-    spark = get_spark("gen_kmeans_oracle", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    by_sf = {sf: build(sf, spark) for sf in SF_DIRS}
-    prim = by_sf[PRIMARY_SF]
-
-    out_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "gomapreduce_spark",
-        "kmeans_expected.py",
+    write_oracles(
+        "kmeans",
+        "Precomputed k-means + SemDeDup oracles (GENERATED — do not edit).\n\n"
+        "Source: tools/gen_kmeans_oracle.py (independent numpy reference,\n"
+        "self-checked against the live pipelines at generation time).\n"
+        "Every committed SF has its own tables in EXPECTED_BY_SF.\n",
+        build,
     )
-    with open(out_path, "w") as fh:
-        fh.write(
-            '"""Precomputed k-means + SemDeDup oracles (GENERATED — do not edit).\n\n'
-            "Source: tools/gen_kmeans_oracle.py (independent numpy reference,\n"
-            "self-checked against the live pipelines at generation time).\n"
-            "Primary constants below are the GENERATED_SF_DIR tables; every\n"
-            "committed SF has its own tables in EXPECTED_BY_SF so the tri-SF\n"
-            'sweep hash-verifies instead of degrading to rows-only.\n"""\n\n'
-            f"GENERATED_SF_DIR = {PRIMARY_SF!r}\n\n"
-            f"KMEANS_EXPECTED_SQL = '''\n{prim['kmeans_embeddings']}\n'''\n\n"
-            f"SEMDEDUP_EXPECTED_SQL = '''\n{prim['semdedup_prune']}\n'''\n\n"
-            f"KMEANS_INCR_EXPECTED_SQL = '''\n{prim['kmeans_incremental']}\n'''\n\n"
-            "EXPECTED_BY_SF = {\n"
-            + "".join(
-                f"    {sf!r}: {{\n"
-                + "".join(f"        {k!r}: '''\n{v}\n''',\n" for k, v in tabs.items())
-                + "    },\n"
-                for sf, tabs in by_sf.items()
-            )
-            + "}\n"
-        )
-    print("wrote", out_path)
     return 0
 
 

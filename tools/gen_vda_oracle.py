@@ -24,7 +24,7 @@ DuckDB-read value list; nothing is imported from pyspark. The
 generator ASSERTS the single-flush regime (n <= 50_000) and refuses
 to write otherwise, so the oracle cannot silently drift onto the
 order-dependent multi-flush/merge path at a bigger SF
-(check_oracle degrades to rows-only there via PRECOMPUTED_ORACLE_SF).
+(check_oracle degrades to rows-only there via PRECOMPUTED_ORACLE_SQL_BY_SF).
 
 A self-check compares the generated table against the live Spark
 pipeline and refuses to write on any mismatch.
@@ -38,19 +38,13 @@ from __future__ import annotations
 import math
 import os
 import sys
-from decimal import ROUND_HALF_UP, Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.gen_common import half_up, write_oracles
+
 ACCURACY = 10_000  # value_deciles_approx default
 HEAD_SIZE = 50_000  # QuantileSummaries.defaultHeadSize — single-flush bound
-
-
-def half_up(x: float, nd: int) -> float:
-    """Spark round(col, nd): HALF_UP over the shortest decimal repr of
-    the double (BigDecimal.valueOf semantics) — ties round away from
-    zero, unlike python's round / np.round banker's rounding."""
-    return float(Decimal(repr(float(x))).quantize(Decimal(1).scaleb(-nd), ROUND_HALF_UP))
 
 
 def gk_single_flush(values: list[float], eps: float) -> list[tuple[float, int, int]]:
@@ -129,15 +123,7 @@ def expected_rows(values: list[float], accuracy: int = ACCURACY) -> list[tuple[i
     ]
 
 
-SF_DIRS = (
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-)
-PRIMARY_SF = "/root/testdata/sf0.01"
-
-
-def build(sf_dir: str, spark) -> str | None:
+def build(sf_dir: str, spark) -> dict[str, str] | None:
     """Expected-table SQL for one sf_dir, or None when that SF's value
     count exceeds HEAD_SIZE — above the single-flush bound even the
     repartition(1) TWIN leaves the pure-function regime (the second
@@ -173,47 +159,25 @@ def build(sf_dir: str, spark) -> str | None:
     rows = ",\n    ".join(
         f"({d}::BIGINT, {n}::BIGINT, {lo!r}::DOUBLE, {hi!r}::DOUBLE)" for d, n, lo, hi in expected
     )
-    return (
-        "\n    SELECT col0 AS decile, col1 AS n, col2 AS lo, col3 AS hi FROM (VALUES\n"
-        f"    {rows}) t\n"
-    )
+    return {
+        "value_deciles_approx_seq": (
+            "\n    SELECT col0 AS decile, col1 AS n, col2 AS lo, col3 AS hi FROM (VALUES\n"
+            f"    {rows}) t\n"
+        )
+    }
 
 
 def main() -> int:
-    from tools.gen_common import reject_retired_sf_dir_arg
-
-    reject_retired_sf_dir_arg()
-    from gomapreduce_spark.session import get_spark
-
-    spark = get_spark("gen_vda_oracle", cpus=8)
-    by_sf = {sf: build(sf, spark) for sf in SF_DIRS}
-    assert by_sf[PRIMARY_SF] is not None
-
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "gomapreduce_spark",
-        "vda_expected.py",
+    write_oracles(
+        "vda",
+        "GENERATED by tools/gen_vda_oracle.py — do not edit.\n\n"
+        "Expected value_deciles_approx_seq output at the single-flush-eligible\n"
+        "SFs (sf0.1's 100k values exceed the 50k head buffer, where even the\n"
+        "repartition(1) twin is arrival-order-dependent, so it has NO entry by\n"
+        "design) from the independent pure-python Greenwald-Khanna restatement\n"
+        "(see the generator docstring), self-checked against the live pipeline.\n",
+        build,
     )
-    with open(out, "w") as f:
-        f.write(
-            '"""GENERATED by tools/gen_vda_oracle.py — do not edit.\n\n'
-            f"Expected value_deciles_approx_seq output at {PRIMARY_SF} (primary;\n"
-            "single-flush-eligible SFs in EXPECTED_BY_SF — sf0.1's 100k values\n"
-            "exceed the 50k head buffer, where even the repartition(1) twin is\n"
-            "arrival-order-dependent, so it has NO entry by design) from the\n"
-            "independent pure-python Greenwald-Khanna restatement (see the\n"
-            'generator docstring), self-checked against the live pipeline.\n"""\n\n'
-            f"GENERATED_SF_DIR = {PRIMARY_SF!r}\n\n"
-            f'VALUE_DECILES_APPROX_SEQ_SQL = """{by_sf[PRIMARY_SF]}"""\n\n'
-            "EXPECTED_BY_SF = {\n"
-            + "".join(
-                f'    {sf!r}: {{"value_deciles_approx_seq": """{sql}"""}},\n'
-                for sf, sql in by_sf.items()
-                if sql is not None
-            )
-            + "}\n"
-        )
-    print("wrote", out)
     return 0
 
 

@@ -31,6 +31,7 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.gen_codec_oracle import ref_dhash  # independent loop-built dHash
+from tools.gen_common import write_oracles
 
 THRESHOLD = 10
 
@@ -104,14 +105,6 @@ def ref_shots(text: str, doc_id: int):
     return rows
 
 
-SF_DIRS = (
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-)
-PRIMARY_SF = "/root/testdata/sf0.01"
-
-
 def build(sf_dir: str, spark) -> dict[str, str]:
     import duckdb
 
@@ -124,16 +117,16 @@ def build(sf_dir: str, spark) -> dict[str, str]:
     shot_rows = [r for doc_id, text in docs if text for r in ref_shots(text, doc_id)]
 
     cuts_sql = (
-        "SELECT v.doc_id::BIGINT AS doc_id, v.n_frames::INT AS n_frames,\n"
+        "\nSELECT v.doc_id::BIGINT AS doc_id, v.n_frames::INT AS n_frames,\n"
         "       v.n_cuts::INT AS n_cuts, v.cut_frames::VARCHAR AS cut_frames,\n"
         "       v.max_step::INT AS max_step\n"
         "FROM (VALUES\n"
         + ",\n".join(f"  ({d}, {nf}, {nc}, {cf!r}, {ms})" for d, nf, nc, cf, ms in rows)
         + "\n) AS v(doc_id, n_frames, n_cuts, cut_frames, max_step)\n"
-        "WHERE v.doc_id IN (SELECT doc_id FROM documents)"
+        "WHERE v.doc_id IN (SELECT doc_id FROM documents)\n"
     )
     shots_sql = (
-        "SELECT v.doc_id::BIGINT AS doc_id, v.shot_id::INT AS shot_id,\n"
+        "\nSELECT v.doc_id::BIGINT AS doc_id, v.shot_id::INT AS shot_id,\n"
         "       v.start_frame::INT AS start_frame, v.n_frames::INT AS n_frames,\n"
         "       v.rep_frame::INT AS rep_frame, v.rep_dhash::BIGINT AS rep_dhash\n"
         "FROM (VALUES\n"
@@ -142,7 +135,7 @@ def build(sf_dir: str, spark) -> dict[str, str]:
             for d, sid, st, nf, rf, rh in shot_rows
         )
         + "\n) AS v(doc_id, shot_id, start_frame, n_frames, rep_frame, rep_dhash)\n"
-        "WHERE v.doc_id IN (SELECT doc_id FROM documents)"
+        "WHERE v.doc_id IN (SELECT doc_id FROM documents)\n"
     )
 
     # self-check: the independent reference must agree with the live
@@ -168,44 +161,17 @@ def build(sf_dir: str, spark) -> dict[str, str]:
 
 
 def main() -> int:
-    from tools.gen_common import reject_retired_sf_dir_arg
-
-    reject_retired_sf_dir_arg()
-    from gomapreduce_spark.session import get_spark
-
-    spark = get_spark("gen_video_oracle", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    by_sf = {sf: build(sf, spark) for sf in SF_DIRS}
-
-    out_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "gomapreduce_spark",
-        "video_expected.py",
+    write_oracles(
+        "video",
+        "Precomputed video oracle tables (GENERATED — do not edit).\n\n"
+        "Source: tools/gen_video_oracle.py (independent tiling/dhash/cut/\n"
+        "shot reference, self-checked against the live pipeline at\n"
+        "generation time). Valid for the deterministic testdata generation\n"
+        "seeded per sf; regenerate if testdata or the video synth\n"
+        "parameters change. Every committed SF has its tables in\n"
+        "EXPECTED_BY_SF.\n",
+        build,
     )
-    with open(out_path, "w") as fh:
-        fh.write(
-            '"""Precomputed video oracle tables (GENERATED — do not edit).\n\n'
-            "Source: tools/gen_video_oracle.py (independent tiling/dhash/cut/\n"
-            "shot reference, self-checked against the live pipeline at\n"
-            "generation time). Valid for the deterministic testdata generation\n"
-            "seeded per sf; regenerate if testdata or the video synth\n"
-            "parameters change. Every committed SF has its tables in\n"
-            'EXPECTED_BY_SF.\n"""\n\n'
-            f"GENERATED_SF_DIR = {PRIMARY_SF!r}\n\n"
-            f"VIDEO_SCENE_CUTS_EXPECTED_SQL = '''\n{by_sf[PRIMARY_SF]['video_scene_cuts']}\n'''\n\n"
-            f"VIDEO_SHOT_FRAMES_EXPECTED_SQL = '''\n{by_sf[PRIMARY_SF]['video_shot_frames']}\n'''\n\n"
-            "EXPECTED_BY_SF = {\n"
-            + "".join(
-                f"    {sf!r}: {{\n"
-                + "".join(
-                    f"        {q!r}: '''\n{sql}\n''',\n" for q, sql in tabs.items()
-                )
-                + "    },\n"
-                for sf, tabs in by_sf.items()
-            )
-            + "}\n"
-        )
-    print("wrote", out_path)
     return 0
 
 
