@@ -11,6 +11,10 @@ Only valid for commutative, re-aggregatable partials (count→sum,
 sum→sum, min→min, max→max) — exactly the algebraic-aggregate contract
 Spark's own partial aggregation relies on. Equality to the unsalted
 aggregation is asserted in tests.
+
+Where a hot key's rows are not needed at all (a boilerplate shingle, a
+degenerate LSH bucket), :func:`hot_keys` caps it instead: the keys over
+a row cap, observed, for an anti-join.
 """
 
 from __future__ import annotations
@@ -83,3 +87,21 @@ def salted_join(
     salts = small.sparkSession.range(n_salts).select(F.col("id").cast("int").alias("__salt"))
     salted_small = small.crossJoin(salts)
     return salted_big.join(salted_small, [key, "__salt"]).drop("__salt")
+
+
+def hot_keys(df: DataFrame, keys: list[str], cap: int, name: str) -> DataFrame:
+    """The hot-key cap: the ``keys`` values holding more than ``cap``
+    rows of ``df``, for the caller to anti-join away. Never silent: the
+    CollectMetrics observation ``name`` reports ``n_hot_keys`` (keys
+    over the cap) and ``n_hot_rows`` (the rows they hold)."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") > cap)
+        .observe(
+            name,
+            F.count(F.lit(1)).alias("n_hot_keys"),
+            F.coalesce(F.sum("n"), F.lit(0)).alias("n_hot_rows"),
+        )
+        .select(*keys)
+    )

@@ -61,6 +61,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.skew import hot_keys
+
 KM_K = 8          # clusters
 KM_ROUNDS = 4     # fixed Lloyd rounds (determinism > convergence test)
 KM_SCALE = 1_000_000  # quantization grid: 1e-6 embedding units
@@ -325,17 +327,7 @@ def semdedup_prune(
         )
     assigned = _assign(q, cents).select("vec_id", "qvec", "cluster").localCheckpoint()
 
-    hot = (
-        assigned.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .where(F.col("n_members") > max_cluster)
-        .observe(
-            "semdedup_hot_clusters",
-            F.count(F.lit(1)).alias("n_hot_clusters"),
-            F.coalesce(F.sum("n_members"), F.lit(0)).alias("n_rows_unpruned"),
-        )
-        .select("cluster")
-    )
+    hot = hot_keys(assigned, ["cluster"], max_cluster, "semdedup_hot_clusters")
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")

@@ -13,17 +13,55 @@ top-k then only scans buckets whose signature is Hamming-close to the
 query's, trading recall for a ~2^d_h scan reduction. Hyperplane
 components derive from the cross-engine hash so the whole pipeline is
 reproducible.
+
+Every kNN path is filter-then-refine top-k: only the candidate
+generator differs. The shared stages are written once below — the
+final ranking (:func:`_top_k`), the collected query slice
+(:func:`_queries`), IVF-PQ training (:func:`_train_ivf_pq`), probe sets
+(:func:`_probe_sets`), PQ encoding (:func:`_pq_encode`), probed ADC
+scoring (:func:`_adc_score`) and the exact rerank (:func:`_rerank`).
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-import hashlib
-
 from ..functions.hashing import h64
+from ..functions.skew import hot_keys
 from ..functions.vectors import cosine, dot, l2_norm
+
+_KNN_SCHEMA = "query_id long, neighbor_id long, sim double, rk long"
+_SCORED_SCHEMA = "query_id long, neighbor_id long, sim double"
+
+
+def _by_sim():
+    """Each query's candidates, best first: sim desc, neighbor_id asc."""
+    return W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The final ranking of every kNN path: the first ``k`` rows per
+    query under :func:`_by_sim`, as (query_id, neighbor_id, sim, rk)."""
+    return (
+        scored.withColumn("rk", F.row_number().over(_by_sim()).cast("long"))
+        .where(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "sim", "rk")
+    )
+
+
+def _matrix(vectors) -> np.ndarray:
+    """Stack embedding arrays into a float64 (rows × dim) matrix."""
+    return np.array([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; an all-zero row stays zero."""
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
 
 
 def knn_bruteforce(emb: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
@@ -47,12 +85,7 @@ def knn_bruteforce(emb: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame
         # norms precomputed per vector; arithmetic identical to cosine()
         .withColumn("sim", F.round(dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 6))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    return _top_k(scored, k)
 
 
 def _plane_vals(dim: int, plane_idx: int) -> list[float]:
@@ -83,9 +116,6 @@ def lsh_signatures(emb: DataFrame, n_planes: int = 6, n_tables: int = 6, dim: in
     run-to-run; the smallest |projection| in the fixtures is ~7e-6,
     orders of magnitude above fp-accumulation-order wiggle, so the
     sign bits match the fold form bit-for-bit."""
-    import numpy as np
-    import pandas as pd
-
     planes = np.stack(
         [_plane_vals(dim, t * 1009 + i) for t in range(n_tables) for i in range(n_planes)]
     )  # (tables·planes) × dim
@@ -95,8 +125,7 @@ def lsh_signatures(emb: DataFrame, n_planes: int = 6, n_tables: int = 6, dim: in
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            bits = (mat @ planes.T >= 0).reshape(len(pdf), n_tables, n_planes)
+            bits = (_matrix(pdf["embedding"]) @ planes.T >= 0).reshape(len(pdf), n_tables, n_planes)
             buckets = (bits * weights).sum(axis=2)  # rows × tables
             yield pd.DataFrame(
                 {
@@ -159,17 +188,7 @@ def knn_lsh(
     c = lsh_signatures(emb, n_planes, n_tables, dim).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), "table", "bucket"
     ).localCheckpoint()
-    hot = (
-        c.groupBy("table", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > max_bucket)
-        .observe(
-            "knn_lsh_hot_buckets",
-            F.count(F.lit(1)).alias("n_hot_buckets"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows_dropped"),
-        )
-        .select("table", "bucket")
-    )
+    hot = hot_keys(c, ["table", "bucket"], max_bucket, "knn_lsh_hot_buckets")
     c = c.join(hot, ["table", "bucket"], "left_anti")
     scored = (
         c.join(
@@ -182,12 +201,7 @@ def knn_lsh(
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("sim", F.round(cosine(F.col("qe"), F.col("ce")), 6))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    return _top_k(scored, k)
 
 
 IVF_SEED = 9000  # plane-index offset so IVF centroids ≠ LSH hyperplanes
@@ -212,18 +226,14 @@ def train_centroids(
     vec_ids), driver-side numpy. At 100 TB the sample is a
     `.sample(fraction)` collect of ~100k rows — training cost is
     independent of corpus size; only the assignment pass scales."""
-    import numpy as np
-
     # deterministic for ANY id layout (orderBy+limit = TakeOrdered) —
     # a `vec_id < N` predicate would silently bake in 0-based fixture
     # ids and crash on an empty sample
     rows = sample if sample is not None else _training_sample(emb)
     if not rows:
         return [_plane_vals(dim, IVF_SEED + j) for j in range(n_centroids)]
-    x = np.array([r[0] for r in rows], dtype=np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    cents = np.array([_plane_vals(dim, IVF_SEED + j) for j in range(n_centroids)])
-    cents = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
+    x = _unit_rows(np.array([r[0] for r in rows], dtype=np.float64))
+    cents = _unit_rows(np.array([_plane_vals(dim, IVF_SEED + j) for j in range(n_centroids)]))
     for _ in range(IVF_ITERS):
         assign = np.argmax(x @ cents.T, axis=1)
         for j in range(n_centroids):
@@ -232,6 +242,22 @@ def train_centroids(
                 c = members.sum(axis=0)
                 cents[j] = c / max(np.linalg.norm(c), 1e-12)
     return [[float(v) for v in c] for c in cents]
+
+
+def _cells(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Each row's coarse cell: the max-dot centroid of the raw
+    (unnormalised) vector, ties to the first centroid."""
+    return np.argmax(mat @ cents.T, axis=1)
+
+
+def _probe_sets(qmat: np.ndarray, cents: np.ndarray, nprobe: int) -> np.ndarray:
+    """Each query's ``nprobe`` cells, best first. The scores are the
+    SAME float64 matmul as :func:`_cells`, so a query and the corpus
+    never disagree on a near-tie, and the stable argsort breaks exact
+    ties to the lower centroid like argmax. (A Catalyst-fold scoring
+    would accumulate in another order and, at nprobe=1, could probe a
+    different cell than the one argmax assigned.)"""
+    return np.argsort(-(qmat @ cents.T), axis=1, kind="stable")[:, :nprobe]
 
 
 def ivf_assignments(
@@ -243,9 +269,6 @@ def ivf_assignments(
     centroid, same as array_position-of-max), no shuffle. Centroids
     come from :func:`train_centroids` (k-means-lite on a deterministic
     sample)."""
-    import numpy as np
-    import pandas as pd
-
     cents = centroids if centroids is not None else train_centroids(emb, n_centroids, dim)
     cmat = np.array(cents, dtype=np.float64)  # n_centroids × dim
 
@@ -253,8 +276,7 @@ def ivf_assignments(
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            cent = np.argmax(mat @ cmat.T, axis=1).astype(np.int32)
+            cent = _cells(_matrix(pdf["embedding"]), cmat).astype(np.int32)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "embedding": pdf["embedding"], "cent": cent}
             )
@@ -278,29 +300,17 @@ def knn_ivf(
     Partitioning the assigned table by ``cent`` makes the probe join a
     co-located lookup at scale. Same schema as knn_bruteforce; recall
     asserted in tests."""
-    import numpy as np
-    import pandas as pd
-
     cents = train_centroids(emb, n_centroids, dim)
     # no cache: assigned feeds exactly one join — caching would pin the
     # corpus in memory for zero reuse and leak into long-lived sessions
     assigned = ivf_assignments(emb, n_centroids, dim, centroids=cents)
-    # query probe order uses the SAME float64 BLAS matmul as corpus
-    # assignment (ivf_assignments), so the two sides can never disagree
-    # on a near-tie: identical inputs through identical accumulation
-    # give bit-identical scores. A Catalyst-fold scoring here would
-    # accumulate in a different order and could rank a near-tied top
-    # centroid differently than argmax assigned it — with nprobe=1 that
-    # query would probe the wrong cell entirely. Stable argsort breaks
-    # exact ties to the lowest centroid index, matching argmax.
     cmat = np.array(cents, dtype=np.float64)
 
     def probe(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            order = np.argsort(-(mat @ cmat.T), axis=1, kind="stable")[:, :nprobe]
+            order = _probe_sets(_matrix(pdf["embedding"]), cmat, nprobe)
             out = pdf.loc[pdf.index.repeat(order.shape[1])].reset_index(drop=True)
             out["probe_cent"] = order.ravel().astype("int32")
             yield out[["vec_id", "embedding", "probe_cent"]]
@@ -326,12 +336,7 @@ def knn_ivf(
             F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    return _top_k(scored, k)
 
 
 def array_funcs_showcase(emb: DataFrame, sample_every: int = 100) -> DataFrame:
@@ -388,15 +393,12 @@ def train_pq_codebooks(
     evenly, Lloyd runs a fixed PQ_ITERS with empty-cluster carry-over —
     no RNG anywhere. Training cost is independent of corpus size (the
     sample is bounded); only the coding pass scales."""
-    import numpy as np
-
     assert dim % m == 0, (dim, m)
     dsub = dim // m
     rows = sample if sample is not None else _training_sample(emb)
     if not rows:
         return np.zeros((m, ksub, dsub), dtype=np.float64)
-    x = np.array([r[0] for r in rows], dtype=np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = _unit_rows(np.array([r[0] for r in rows], dtype=np.float64))
     books = np.zeros((m, ksub, dsub), dtype=np.float64)
     for j in range(m):
         sub = x[:, j * dsub : (j + 1) * dsub]
@@ -422,45 +424,88 @@ def train_pq_codebooks(
     return books
 
 
+def _pq_encode(x: np.ndarray, books: np.ndarray):
+    """PQ-encode the unit rows ``x``: per subspace, the argmin-L2
+    codeword of ``books`` (m × ksub × dsub). Returns the int32
+    (rows × m) codes and each row's summed squared error."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    err = np.zeros(len(x), dtype=np.float64)
+    for j in range(m):
+        sub = x[:, j * dsub : (j + 1) * dsub]
+        d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+        codes[:, j] = np.argmin(d2, axis=1)
+        err += d2[np.arange(len(x)), codes[:, j]]
+    return codes, err
+
+
+def _adc_lut(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """ADC lookup tables of the raw query rows: LUT[q, j, c] =
+    <unit query q's sub-vector j, codeword c of subspace j>."""
+    m, _, dsub = books.shape
+    return np.einsum("qjd,jcd->qjc", _unit_rows(qmat).reshape(len(qmat), m, dsub), books)
+
+
 def pq_codes(
     emb: DataFrame, m: int = PQ_M, ksub: int = PQ_KSUB, dim: int = 64, codebooks=None
 ) -> DataFrame:
-    """PQ encoding: one narrow Arrow pass — normalize, per-subspace
-    argmin-L2 against the codebook, emit (vec_id, codes array<int>,
-    recon_mse). 64 floats (256 B) become m 4-bit codes (8 B at the
-    defaults) — the ~32× memory-bandwidth reduction is what makes scanning a 100 TB
+    """PQ encoding: one narrow Arrow pass of :func:`_pq_encode` over the
+    normalized vectors, emitting (vec_id, codes array<int>, recon_mse).
+    64 floats (256 B) become m 4-bit codes (8 B at the defaults) — the
+    ~32× memory-bandwidth reduction is what makes scanning a 100 TB
     vector corpus feasible. Zero shuffle; codebooks ride in the
     closure (m·ksub·dsub floats, broadcast with the task)."""
-    import numpy as np
-    import pandas as pd
-
     books = codebooks if codebooks is not None else train_pq_codebooks(emb, m, ksub, dim)
-    dsub = dim // m
 
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            codes = np.zeros((len(mat), m), dtype=np.int32)
-            mse = np.zeros(len(mat), dtype=np.float64)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-                mse += d2[np.arange(len(mat)), codes[:, j]]
+            codes, err = _pq_encode(_unit_rows(_matrix(pdf["embedding"])), books)
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "codes": list(codes),
-                    "recon_mse": mse / dim,
-                }
+                {"vec_id": pdf["vec_id"], "codes": list(codes), "recon_mse": err / dim}
             )
 
     return emb.select("vec_id", "embedding").mapInPandas(
         encode, "vec_id long, codes array<int>, recon_mse double"
     )
+
+
+def _queries(qdf: DataFrame):
+    """The query slice, collected (bounded by construction): (rows,
+    int64 ids, raw float64 matrix), or None when the slice is empty."""
+    rows = qdf.select("vec_id", "embedding").collect()
+    if not rows:
+        return None
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    return rows, ids, _matrix(r["embedding"] for r in rows)
+
+
+def _rerank(scored: DataFrame, vectors: DataFrame, qrows, rerank: int, k: int) -> DataFrame:
+    """Exact refine of a compressed scan: each query's top-``rerank``
+    rows of ``scored`` form a shortlist that is BROADCAST onto
+    ``vectors`` (vec_id, embedding), joined with the broadcast query
+    vectors, rescored by exact cosine and cut by :func:`_top_k`. Only
+    n_queries × rerank rows are scored exactly."""
+    shortlist = (
+        scored.withColumn("rk", F.row_number().over(_by_sim()))
+        .where(F.col("rk") <= rerank)
+        .select("query_id", "neighbor_id")
+    )
+    qdf = vectors.sparkSession.createDataFrame(
+        [(int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in qrows],
+        "query_id long, qe array<float>",
+    )
+    reranked = (
+        vectors.join(F.broadcast(shortlist), vectors["vec_id"] == shortlist["neighbor_id"])
+        .join(F.broadcast(qdf), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
+        )
+    )
+    return _top_k(reranked, k)
 
 
 def knn_pq(
@@ -477,36 +522,22 @@ def knn_pq(
     against the codebooks (driver-side — n_queries · m · ksub floats,
     bounded by construction), then the corpus scan scores each vector
     as a sum of m table lookups over its codes — no float vector is
-    touched during the scan. The ADC top-``rerank`` shortlist is then
-    RE-RANKED with exact cosine on the raw vectors (the standard
-    ADC+rerank production shape: the compressed scan does the corpus-
-    sized work, exact scoring touches only n_queries × rerank rows).
-    Completes the ANN family: knn_bruteforce (exact) / knn_lsh (hash
-    buckets) / knn_ivf (inverted lists) / knn_pq (compressed-domain
-    scan). Same output schema; recall asserted in tests.
+    touched during the scan. The ADC top-``rerank`` shortlist then goes
+    through the exact :func:`_rerank`. Completes the ANN family:
+    knn_bruteforce (exact) / knn_lsh (hash buckets) / knn_ivf (inverted
+    lists) / knn_pq (compressed-domain scan). Same output schema;
+    recall asserted in tests.
 
     Scale shape: encoding and ADC scoring are narrow Arrow passes over
     the codes table (m·log2(ksub) bits/vector — 16 B at the defaults,
-    a 16× bandwidth cut); the shortlist join BROADCASTS the tiny
-    shortlist onto the corpus scan; the only shuffles are the two
-    bounded top-k windows."""
-    import numpy as np
-    import pandas as pd
-
+    a 16× bandwidth cut); the only shuffles are the two bounded top-k
+    windows."""
     books = train_pq_codebooks(emb, m, ksub, dim)
-    dsub = dim // m
-    qrows = (
-        emb.where(F.col("vec_id") < n_queries).select("vec_id", "embedding").collect()
-    )
-    if not qrows:  # empty corpus / no query rows: defined empty result
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rk long"
-        )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    # LUT[q, j, c] = <query_q sub_j, codebook_j[c]>
-    lut = np.einsum("qjd,jcd->qjc", qmat.reshape(len(qmat), m, dsub), books)
+    q = _queries(emb.where(F.col("vec_id") < n_queries))
+    if q is None:  # empty corpus / no query rows: defined empty result
+        return emb.sparkSession.createDataFrame([], _KNN_SCHEMA)
+    qrows, qids, qmat = q
+    lut = _adc_lut(qmat, books)
 
     def score(batches):
         for pdf in batches:
@@ -526,33 +557,8 @@ def knn_pq(
             )
             yield out[out["query_id"] != out["neighbor_id"]]
 
-    scored = pq_codes(emb, m, ksub, dim, codebooks=books).mapInPandas(
-        score, "query_id long, neighbor_id long, sim double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = emb.sparkSession.createDataFrame(
-        [(int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in qrows],
-        "query_id long, qe array<float>",
-    )
-    reranked = (
-        emb.join(F.broadcast(shortlist), emb["vec_id"] == shortlist["neighbor_id"])
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
-        )
-    )
-    return (
-        reranked.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    scored = pq_codes(emb, m, ksub, dim, codebooks=books).mapInPandas(score, _SCORED_SCHEMA)
+    return _rerank(scored, emb, qrows, rerank, k)
 
 
 def hard_negative_mining(emb: DataFrame, n_anchors: int = 10) -> DataFrame:
@@ -628,6 +634,42 @@ def hard_negative_mining(emb: DataFrame, n_anchors: int = 10) -> DataFrame:
     )
 
 
+def _train_ivf_pq(emb: DataFrame, n_centroids: int, m: int, ksub: int, dim: int):
+    """IVF-PQ training from ONE collected sample (one TakeOrdered job
+    feeds both trainers): (float64 coarse centroids, PQ codebooks)."""
+    sample = _training_sample(emb)
+    cents = np.array(train_centroids(emb, n_centroids, dim, sample=sample), dtype=np.float64)
+    return cents, train_pq_codebooks(emb, m, ksub, dim, sample=sample)
+
+
+def _ivf_pq_encode(embeddings, cents: np.ndarray, books: np.ndarray):
+    """One batch's IVF-PQ entries: the coarse cell of each raw vector
+    (:func:`_cells`) and the PQ codes of its unit vector."""
+    mat = _matrix(embeddings)
+    return _cells(mat, cents), _pq_encode(_unit_rows(mat), books)[0]
+
+
+def _adc_score(qids, probe, lut, ids, cells, codes):
+    """Probed ADC scoring of one batch: for each query, the rows whose
+    cell is in its probe set (itself excluded) score the sum of their
+    m LUT entries, rounded to 6. Yields one (query_id, neighbor_id,
+    sim) frame, or nothing when the batch holds no probed row."""
+    frames = []
+    for qi in range(len(qids)):
+        mask = np.isin(cells, probe[qi]) & (ids != qids[qi])
+        if not mask.any():
+            continue
+        c = codes[mask]
+        sims = np.zeros(c.shape[0], dtype=np.float64)
+        for j in range(lut.shape[1]):
+            sims += lut[qi, j, c[:, j]]
+        frames.append(
+            pd.DataFrame({"query_id": qids[qi], "neighbor_id": ids[mask], "sim": np.round(sims, 6)})
+        )
+    if frames:
+        yield pd.concat(frames)
+
+
 def knn_ivf_pq(
     emb: DataFrame,
     n_queries: int = 10,
@@ -663,88 +705,25 @@ def knn_ivf_pq(
     exact rerank, quantization is nearly free, so recall tuning is
     nprobe tuning (0.78 at the nprobe=8 default).
     """
-    import numpy as np
-    import pandas as pd
+    cents, books = _train_ivf_pq(emb, n_centroids, m, ksub, dim)
+    q = _queries(emb.where(F.col("vec_id") < n_queries))
+    if q is None:
+        return emb.sparkSession.createDataFrame([], _KNN_SCHEMA)
+    qrows, qids, qmat = q
+    probe = _probe_sets(qmat, cents, nprobe)
+    lut = _adc_lut(qmat, books)
 
-    sample = _training_sample(emb)  # ONE TakeOrdered feeds both trainers
-    cents = np.array(train_centroids(emb, n_centroids, dim, sample=sample), dtype=np.float64)
-    books = train_pq_codebooks(emb, m, ksub, dim, sample=sample)
-    dsub = dim // m
-    qrows = emb.where(F.col("vec_id") < n_queries).select("vec_id", "embedding").collect()
-    if not qrows:
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rk long"
-        )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-    qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    # probe sets use the SAME matmul as corpus assignment (stable
-    # argsort, ties to the lower centroid — the knn_ivf determinism
-    # argument applies unchanged)
-    probe = np.argsort(-(qmat @ cents.T), axis=1, kind="stable")[:, :nprobe]
-    lut = np.einsum("qjd,jcd->qjc", qn.reshape(len(qn), m, dsub), books)
-
+    # encode and score stay fused: a separate encode stage would add a
+    # Python pass and make the rerank re-run it
     def encode_and_score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            cell = np.argmax(mat @ cents.T, axis=1)
-            x = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for j in range(m):
-                sub = x[:, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            ids = pdf["vec_id"].to_numpy()
-            frames = []
-            for qi in range(len(qids)):
-                mask = np.isin(cell, probe[qi]) & (ids != qids[qi])
-                if not mask.any():
-                    continue
-                c = codes[mask]
-                sims = np.zeros(c.shape[0], dtype=np.float64)
-                for j in range(m):
-                    sims += lut[qi, j, c[:, j]]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": ids[mask],
-                            "sim": np.round(sims, 6),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames)
+            cells, codes = _ivf_pq_encode(pdf["embedding"], cents, books)
+            yield from _adc_score(qids, probe, lut, pdf["vec_id"].to_numpy(), cells, codes)
 
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        encode_and_score, "query_id long, neighbor_id long, sim double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = emb.sparkSession.createDataFrame(
-        [(int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in qrows],
-        "query_id long, qe array<float>",
-    )
-    reranked = (
-        emb.join(F.broadcast(shortlist), emb["vec_id"] == shortlist["neighbor_id"])
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
-        )
-    )
-    return (
-        reranked.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    scored = emb.select("vec_id", "embedding").mapInPandas(encode_and_score, _SCORED_SCHEMA)
+    return _rerank(scored, emb, qrows, rerank, k)
 
 
 def save_knn_index(
@@ -756,11 +735,10 @@ def save_knn_index(
     dim: int = 64,
 ) -> None:
     """Persist the IVF+PQ index :func:`knn_against_index` serves from —
-    the PRODUCTION ANN shape (round-13 verdict item 5): the in-query
-    :func:`knn_ivf_pq` retrains centroids/codebooks and re-encodes the
-    corpus on EVERY query, which is the demo form; a serving pipeline
-    trains once, persists, and answers every arriving query batch
-    against the standing index.
+    the PRODUCTION ANN shape: the in-query :func:`knn_ivf_pq` retrains
+    centroids/codebooks and re-encodes the corpus on EVERY query, which
+    is the demo form; a serving pipeline trains once, persists, and
+    answers every arriving query batch against the standing index.
 
     Layout: ``<path>/lists`` holds (vec_id, embedding, codes)
     partitioned by coarse cell — a Hive layout, so a query probing
@@ -772,11 +750,11 @@ def save_knn_index(
     n_centroids + m·ksub rows of float64 arrays — that the query path
     loads driver-side (bounded by construction, never corpus-sized).
 
-    Training + encoding match :func:`knn_ivf_pq` operation-for-
-    operation (same bounded sample, same BLAS matmuls, same argmin/
-    argmax tie rules), so serving from the index returns BIT-IDENTICAL
-    results to the in-query form — parity-asserted in tests, and the
-    registered query shares knn_ivf_pq's independent VALUES oracle.
+    Training and encoding are :func:`_train_ivf_pq` and
+    :func:`_ivf_pq_encode`, the same functions :func:`knn_ivf_pq` runs,
+    so serving from the index returns BIT-IDENTICAL results to the
+    in-query form (parity-asserted in tests; the registered query
+    shares knn_ivf_pq's independent VALUES oracle).
 
     Scale shape: one bounded-sample train (corpus-size-independent),
     ONE narrow Arrow encode pass over the corpus, one shuffle on cell
@@ -786,37 +764,21 @@ def save_knn_index(
     paid once per index build."""
     import os
 
-    import numpy as np
-    import pandas as pd
-
     from ..sources.registry import write_partitioned_corpus
 
-    spark = emb.sparkSession
-    sample = _training_sample(emb)
-    cents = np.array(
-        train_centroids(emb, n_centroids, dim, sample=sample), dtype=np.float64
-    )
-    books = train_pq_codebooks(emb, m, ksub, dim, sample=sample)
-    dsub = dim // m
+    cents, books = _train_ivf_pq(emb, n_centroids, m, ksub, dim)
 
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            cell = np.argmax(mat @ cents.T, axis=1).astype(np.int32)
-            x = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                sub = x[:, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
+            cells, codes = _ivf_pq_encode(pdf["embedding"], cents, books)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
                     "embedding": pdf["embedding"],
                     "codes": list(codes),
-                    "cent": cell,
+                    "cent": cells.astype(np.int32),
                 }
             )
 
@@ -832,7 +794,9 @@ def save_knn_index(
         for c in range(ksub)
     ]
     (
-        spark.createDataFrame(model_rows, "kind string, i int, c int, vals array<double>")
+        emb.sparkSession.createDataFrame(
+            model_rows, "kind string, i int, c int, vals array<double>"
+        )
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(os.path.join(path, "model"))
@@ -853,19 +817,15 @@ def knn_against_index(
     probe set driver-side, and scan ONLY the probed cells (the Hive
     partition filter prunes every other directory at planning time —
     scan fraction ≈ |union of probe sets| / n_centroids before a byte
-    is read). ADC scoring, shortlist and exact rerank are
-    operation-identical to :func:`knn_ivf_pq`, so the result is
-    bit-equal to the in-query form with the same parameters
-    (parity-asserted in tests).
+    is read). Probe sets, :func:`_adc_score` and :func:`_rerank` are
+    :func:`knn_ivf_pq`'s, so the result is bit-equal to the in-query
+    form with the same parameters (parity-asserted in tests).
 
     Scale shape: model + query batch are bounded driver-side rows; the
     pruned lists scan is one narrow Arrow pass; the rerank joins a
     BROADCAST shortlist back onto the same pruned scan; the only
     shuffles are the two bounded top-k windows."""
     import os
-
-    import numpy as np
-    import pandas as pd
 
     mrows = spark.read.parquet(os.path.join(path, "model")).collect()
     cent_rows = sorted(
@@ -881,18 +841,12 @@ def knn_against_index(
     books = np.zeros((m, ksub, dsub), dtype=np.float64)
     for i, c, vals in book_rows:
         books[i][c] = vals
-    qrows = queries_df.select("vec_id", "embedding").collect()
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rk long"
-        )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-    qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    # probe order: SAME unnormalized matmul + stable argsort as index
-    # build / knn_ivf_pq — near-tied centroids rank identically
-    probe = np.argsort(-(qmat @ cents.T), axis=1, kind="stable")[:, :nprobe]
-    lut = np.einsum("qjd,jcd->qjc", qn.reshape(len(qn), m, dsub), books)
+    q = _queries(queries_df)
+    if q is None:
+        return spark.createDataFrame([], _KNN_SCHEMA)
+    qrows, qids, qmat = q
+    probe = _probe_sets(qmat, cents, nprobe)
+    lut = _adc_lut(qmat, books)
     probed = sorted({int(c) for row in probe for c in row})
     lists = spark.read.parquet(os.path.join(path, "lists")).where(
         F.col("cent").isin(probed)
@@ -903,56 +857,11 @@ def knn_against_index(
             if not len(pdf):
                 continue
             codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            cell = pdf["cent"].to_numpy()
-            ids = pdf["vec_id"].to_numpy()
-            frames = []
-            for qi in range(len(qids)):
-                mask = np.isin(cell, probe[qi]) & (ids != qids[qi])
-                if not mask.any():
-                    continue
-                c = codes[mask]
-                sims = np.zeros(c.shape[0], dtype=np.float64)
-                for j in range(m):
-                    sims += lut[qi, j, c[:, j]]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": ids[mask],
-                            "sim": np.round(sims, 6),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames)
+            ids, cells = pdf["vec_id"].to_numpy(), pdf["cent"].to_numpy()
+            yield from _adc_score(qids, probe, lut, ids, cells, codes)
 
-    scored = lists.select("vec_id", "codes", "cent").mapInPandas(
-        score, "query_id long, neighbor_id long, sim double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = spark.createDataFrame(
-        [(int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in qrows],
-        "query_id long, qe array<float>",
-    )
-    reranked = (
-        lists.join(F.broadcast(shortlist), lists["vec_id"] == shortlist["neighbor_id"])
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
-        )
-    )
-    return (
-        reranked.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    scored = lists.select("vec_id", "codes", "cent").mapInPandas(score, _SCORED_SCHEMA)
+    return _rerank(scored, lists, qrows, rerank, k)
 
 
 def embedding_drift(emb: DataFrame) -> DataFrame:
@@ -1070,8 +979,6 @@ def hybrid_search(docs: DataFrame, emb: DataFrame) -> DataFrame:
     sums + half-up division → micro-grid components identical in any
     engine); cosine is the shared left-to-right fold; RRF terms are
     exact reciprocals of small ints — all rounded half-up at 6."""
-    import numpy as np
-
     from .clustering import KM_SCALE
     from .text import bm25_search
 

@@ -720,6 +720,20 @@ _PRIORITY = (
     "repetition_stats",
     "boilerplate_spans",
     "sparse_doc_similarity",
+    "knn_bruteforce",
+    "knn_lsh",
+    "knn_ivf",
+    "knn_pq",
+    "knn_ivf_pq",
+    "knn_against_index",
+    "streaming_interval_join",
+    "streaming_left_outer_join",
+    "streaming_full_outer_join",
+    "ngram_jaccard_pairs",
+    "containment_pairs",
+    "embedding_near_dup",
+    "embedding_dedup_clusters",
+    "translated_near_dups",
 )
 QUERIES = {k: QUERIES[k] for k in _PRIORITY} | QUERIES
 

@@ -288,18 +288,19 @@ def streaming_dedup_events(
     return _run_to_memory(stream.dropDuplicatesWithinWatermark([id_col]), "append")
 
 
-def streaming_click_purchase_join(
-    spark: SparkSession, events_path: str, within_minutes: int = 60
+def _interval_join(
+    spark: SparkSession,
+    events_path: str,
+    within_minutes: int,
+    how: str,
+    max_files_per_trigger: int | None,
 ) -> DataFrame:
-    """Stream-stream inner join: each purchase matched to the same
-    user's clicks in the preceding ``within_minutes`` — the canonical
-    attribution join, with watermarks on BOTH sides so join state is
-    garbage-collected beyond the interval (unbounded-state stream joins
-    don't survive continuous ingest).
-
-    Returns (user_id, click_id, purchase_id) pairs; batch parity against
-    the identical static join is asserted in tests."""
-    stream = _read_events_stream(spark, events_path)
+    """The click ⋈ purchase interval join the three public forms share:
+    same user, ``click_ts <= purchase_ts <= click_ts + within_minutes``,
+    both sides watermarked 1 hour so join state is evicted beyond the
+    interval. Returns (c_user, click_id, click_ts, p_user, purchase_id,
+    purchase_ts) rows joined ``how``."""
+    stream = _read_events_stream(spark, events_path, max_files_per_trigger)
     clicks = (
         stream.where(F.col("event_type") == "click")
         .select(
@@ -318,13 +319,30 @@ def streaming_click_purchase_join(
         )
         .withWatermark("purchase_ts", "1 hour")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within_minutes} MINUTES")),
-    ).select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
-    return _run_to_memory(joined, "append")
+        how,
+    )
+
+
+def streaming_click_purchase_join(
+    spark: SparkSession, events_path: str, within_minutes: int = 60
+) -> DataFrame:
+    """Stream-stream inner join: each purchase matched to the same
+    user's clicks in the preceding ``within_minutes`` — the canonical
+    attribution join, with watermarks on BOTH sides so join state is
+    garbage-collected beyond the interval (unbounded-state stream joins
+    don't survive continuous ingest).
+
+    Returns (user_id, click_id, purchase_id) pairs; batch parity against
+    the identical static join is asserted in tests."""
+    joined = _interval_join(spark, events_path, within_minutes, "inner", None)
+    return _run_to_memory(
+        joined.select(F.col("c_user").alias("user_id"), "click_id", "purchase_id"), "append"
+    )
 
 
 def streaming_left_outer_interval_join(
@@ -354,33 +372,10 @@ def streaming_left_outer_interval_join(
     asserts the three-way batch parity (stream == watermark-filtered
     batch left join).
     """
-    stream = _read_events_stream(spark, events_path, max_files_per_trigger)
-    clicks = (
-        stream.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
+    joined = _interval_join(spark, events_path, within_minutes, "leftOuter", max_files_per_trigger)
+    return _run_to_memory(
+        joined.select(F.col("c_user").alias("user_id"), "click_id", "purchase_id"), "append"
     )
-    purchases = (
-        stream.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within_minutes} MINUTES")),
-        "leftOuter",
-    ).select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
-    return _run_to_memory(joined, "append")
 
 
 def streaming_full_outer_interval_join(
@@ -407,37 +402,15 @@ def streaming_full_outer_interval_join(
     rows for clicks with click_ts + interval < watermark and purchases
     with purchase_ts < watermark — which is what makes it
     hash-oracleable like the LEFT OUTER form."""
-    stream = _read_events_stream(spark, events_path, max_files_per_trigger)
-    clicks = (
-        stream.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
+    joined = _interval_join(spark, events_path, within_minutes, "fullOuter", max_files_per_trigger)
+    return _run_to_memory(
+        joined.select(
+            F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
+            "click_id",
+            "purchase_id",
+        ),
+        "append",
     )
-    purchases = (
-        stream.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within_minutes} MINUTES")),
-        "fullOuter",
-    ).select(
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        "click_id",
-        "purchase_id",
-    )
-    return _run_to_memory(joined, "append")
 
 
 def streaming_session_windows(spark: SparkSession, events_path: str, gap_minutes: int = 30) -> DataFrame:

@@ -1857,6 +1857,24 @@ def test_knn_against_index_parity_and_partition_pruning(spark, sf_med, tmp_path)
     assert sorted(tuple(r) for r in narrow.collect()) == want_narrow
 
 
+def test_knn_empty_query_slice(spark, sf_small, tmp_path):
+    """An empty query slice is a defined empty result with the kNN
+    schema on every path that collects its query slice."""
+    emb = load_table(spark, sf_small, "embeddings")
+    path = str(tmp_path / "knn_idx")
+    similarity.save_knn_index(emb, path)
+    outs = {
+        "knn_pq": similarity.knn_pq(emb, n_queries=0),
+        "knn_ivf_pq": similarity.knn_ivf_pq(emb, n_queries=0),
+        "knn_against_index": similarity.knn_against_index(spark, path, emb.where(F.lit(False))),
+    }
+    for name, out in outs.items():
+        assert out.schema.simpleString() == (
+            "struct<query_id:bigint,neighbor_id:bigint,sim:double,rk:bigint>"
+        ), name
+        assert out.count() == 0, name
+
+
 def test_pandas_udf_scalar_and_grouped_agg_match_catalyst(spark, sf_small):
     """pandas_udf — the remaining Python-exchange API: the SCALAR form
     (Arrow-vectorized per-batch numpy) must agree with the equivalent

@@ -65,3 +65,15 @@ def test_oracle_writer_round_trips():
     assert ns["EXPECTED_BY_SF"] == by_sf
     with pytest.raises(AssertionError):
         render("Doc.\n", {"/data/sf1": {"a": "SELECT '''' AS s"}})
+
+
+def test_oracle_priority_window():
+    """The correctness run checks only the first 50 QUERIES entries, so
+    a duplicate, an oracle-less entry or an overflow in ``_PRIORITY``
+    would silently push a recently changed path out of that window."""
+    from gomapreduce_spark.queries import _PRIORITY, ORACLES, QUERIES
+
+    assert len(set(_PRIORITY)) == len(_PRIORITY)
+    assert [q for q in _PRIORITY if q not in ORACLES] == []
+    assert len(_PRIORITY) <= 50
+    assert list(QUERIES)[: len(_PRIORITY)] == list(_PRIORITY)
