@@ -44,8 +44,8 @@ result.
 
 One honest gap vs the reference: a ``reply_lost`` injection fires
 after the wrapped function EXHAUSTS, so if the consumer stops early
-(an engine ``take()`` hitting its cap mid-partition, a pushed-down
-limit) the generator is closed with GeneratorExit and the post-yield
+(the engine's bounded collect stopping a reduce partition at its
+cap, a pushed-down limit) the generator is closed with GeneratorExit and the post-yield
 raise never runs — correctly so: Spark has already marked that task
 successful, and there is no attempt left to fail. Reply-loss chaos is
 therefore only exercised on fully-consumed partitions (every test

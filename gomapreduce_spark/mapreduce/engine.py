@@ -12,12 +12,20 @@ Spark lineage:
       .partitionBy(R, hash)              # O6/O7, adler32%R → portable hash
       .groupByKey()                      # O8/O9, shuffle read + group
       .flatMap(reducer.reduce)           # O10, complete value list per key
-      → outputer                         # O12
+      .mapPartitions(islice(cap + 1))    # bounded per reduce partition
+      .collect()                         # ONE Spark job: map + shuffle + reduce
+      → outputer                         # O12; PartitionedSink adds one
+                                         # JVM-only parquet write
 
 The map→reduce stage barrier (reference mapreduce.go:119-143) is the
-shuffle boundary; scheduling/retries/heartbeats (O16-O23) are Spark
-internals. Job/task wall-clock stats (reference statsManager.go:89-115)
-are kept as a simple ``JobStats``.
+shuffle boundary; a submit is one collect job — the reference's one
+round of one map phase and one reduce phase. A result over
+``MAX_DRIVER_RESULT_PAIRS`` is not collected whole: it goes to the
+outputer's distributed ``write_rdd`` (the reduce partitions re-run
+once from the kept shuffle files, written as R files).
+Scheduling/retries/heartbeats (O16-O23) are Spark internals. Job/task
+wall-clock stats (reference statsManager.go:89-115) are kept as a
+simple ``JobStats``.
 
 Scale posture: ``groupByKey`` is mandatory for the general contract
 (the reducer sees ALL values for its key — reference tasks.go:143-161)
@@ -38,6 +46,7 @@ import time
 import uuid
 from collections import Counter
 from dataclasses import dataclass, field
+from itertools import islice
 from typing import Any, NamedTuple
 
 from pyspark.accumulators import AccumulatorParam
@@ -123,14 +132,14 @@ class JobStats:
     @property
     def task_stats(self) -> list[TaskStat]:
         """Per-task records, populated once the job's action has run.
-        Tasks cut short by an early-terminating action (``take`` hitting
-        its limit mid-partition) may not report — same blind spot as the
-        reference's stats on interrupted tasks. Re-executions of the
-        same logical task (a second action over the lineage — e.g. the
-        oversized-result divert path peeks then write_rdd's — or a
-        Spark retry/speculative attempt) are deduplicated by
-        (stage, partition), last attempt wins, so counts reflect
-        logical tasks, not physical attempts."""
+        Tasks cut short by an early-terminating action (the bounded
+        collect stopping a partition at its cap) may not report — same
+        blind spot as the reference's stats on interrupted tasks.
+        Re-executions of the same logical task (a second action over the
+        lineage — e.g. the oversized-result divert path collects then
+        write_rdd's — or a Spark retry/speculative attempt) are
+        deduplicated by (stage, partition), last attempt wins, so counts
+        reflect logical tasks, not physical attempts."""
         if self._accum is None:
             return []
         seen: dict[tuple[str, int], TaskStat] = {}
@@ -235,12 +244,23 @@ class MapReduceEngine:
     # start being "data" — divert to a distributed writer instead
     MAX_DRIVER_RESULT_PAIRS = 100_000
 
+    def _bounded_collect(self, rdd) -> list[tuple[str, Any]]:
+        """Collect at most MAX_DRIVER_RESULT_PAIRS + 1 pairs per reduce
+        partition in ONE job. The ``islice`` is pipelined into the
+        reduce stage (no extra stage), so the driver holds at most
+        R·(cap + 1) pairs; a result longer than the cap is detected
+        without ever shipping it whole. ``take`` would need a job for
+        partition 0 and more for the rest, relaunching the reduce stage
+        each time."""
+        cap = self.MAX_DRIVER_RESULT_PAIRS
+        return rdd.mapPartitions(lambda it: islice(it, cap + 1)).collect()
+
     def _run(self, job: Job) -> None:
         try:
             self._status[job.job_id] = "working"
             rdd = self.run_rdd(job)
-            peek = rdd.take(self.MAX_DRIVER_RESULT_PAIRS + 1)
-            if len(peek) > self.MAX_DRIVER_RESULT_PAIRS:
+            pairs = self._bounded_collect(rdd)
+            if len(pairs) > self.MAX_DRIVER_RESULT_PAIRS:
                 # result too large for the per-key driver loop: divert to
                 # the outputer's distributed writer or fail loudly
                 write_rdd = getattr(job.outputer, "write_rdd", None)
@@ -252,7 +272,7 @@ class MapReduceEngine:
                     )
                 write_rdd(self.spark, rdd)
             else:
-                for k, v in peek:
+                for k, v in pairs:
                     job.outputer.output(k, v)
                 flush = getattr(job.outputer, "flush", None)
                 if callable(flush):
@@ -268,7 +288,7 @@ class MapReduceEngine:
         materialize more than MAX_DRIVER_RESULT_PAIRS on the driver
         (outputs above the cap belong on a distributed sink —
         ``run_rdd`` + ``PartitionedSink.write_rdd``)."""
-        pairs = self.run_rdd(job).take(self.MAX_DRIVER_RESULT_PAIRS + 1)
+        pairs = self._bounded_collect(self.run_rdd(job))
         if len(pairs) > self.MAX_DRIVER_RESULT_PAIRS:
             raise RuntimeError(
                 f"job result exceeds {self.MAX_DRIVER_RESULT_PAIRS} pairs; "

@@ -11,6 +11,10 @@ S3Outputer: outputer.go:21-34, int-values-only). Here:
 - ``MemoryOutputer``    — collects pairs on the driver (test-scale; the
   reference's one-S3-object-per-key sink is the same driver-side,
   per-key loop, outputer.go:29-34).
+- ``PartitionedSink``   — parquet files of ``key string, value string``
+  rows, each file sorted by key: the MapReduce paper's R output files
+  (one file for a result small enough to buffer on the driver) in
+  place of the reference's one object per key.
 - ``split_file_into_chunks`` — the reference's input chunker
   (s3_utils.go:71-107): split a file into ~chunk_size byte pieces on
   line boundaries. Kept for API fidelity; Spark's file splitting
@@ -103,15 +107,23 @@ class PartitionedSink(Outputer):
     """Distributed keyed sink — the scale-correct version of the
     reference's one-S3-object-per-key S3Outputer (outputer.go:29-34).
 
+    The output is plain parquet with two string data columns, ``key``
+    and ``value``, so every key reads back exactly as written (no
+    type inference from directory names). One object — or one
+    directory — per key is pathological at 100 TB: a billion tiny PUTs.
+
     ``output()`` buffers driver-side for facade fidelity and the engine
-    flushes the buffer to disk when the job finishes (``flush`` is
-    called by MapReduceEngine._run for any outputer that defines it) —
-    so ``submit(..., PartitionedSink(path))`` produces files without
-    the caller knowing about ``write_rdd``. ``write_rdd`` remains the
-    fully distributed path: a ``partitionBy("key")`` parquet write, one
-    directory per key instead of one object per key (one-object-per-key
-    is pathological at 100 TB: a billion tiny PUTs). Read back with
-    ``spark.read.parquet(path)`` — key is a partition column."""
+    flushes the buffer when the job finishes (``flush`` is called by
+    MapReduceEngine._run for any outputer that defines it) — so
+    ``submit(..., PartitionedSink(path))`` produces files without the
+    caller knowing about ``write_rdd``. ``flush`` hands the JVM one
+    key-sorted Arrow table (a local relation: no Python stage), writes
+    it as one file and always overwrites ``path``, with an empty dataset
+    when there are no results. ``write_rdd`` is the fully distributed
+    path for results above the engine's driver cap: it writes the R
+    reduce partitions as they are, each sorted by key — the MapReduce
+    paper's R output files; hash partitioning puts each key in exactly
+    one of them. Read back with ``spark.read.parquet(path)``."""
 
     def __init__(self, path: str):
         self.path = path
@@ -121,18 +133,21 @@ class PartitionedSink(Outputer):
         self.results[key] = value
 
     def flush(self, spark) -> None:
-        if not self.results:
-            return
-        df = spark.createDataFrame(
-            [(str(k), str(v)) for k, v in self.results.items()], "key string, value string"
-        )
-        df.write.mode("overwrite").partitionBy("key").parquet(self.path)
+        import pyarrow as pa
+
+        rows = sorted((str(k), str(v)) for k, v in self.results.items())
+        table = pa.table({
+            "key": pa.array([k for k, _ in rows], pa.string()),
+            "value": pa.array([v for _, v in rows], pa.string()),
+        })
+        # at most MAX_DRIVER_RESULT_PAIRS rows: one file, not one per core
+        spark.createDataFrame(table).coalesce(1).write.mode("overwrite").parquet(self.path)
 
     def write_rdd(self, spark, pairs_rdd) -> None:
         df = spark.createDataFrame(
             pairs_rdd.map(lambda kv: (str(kv[0]), str(kv[1]))), "key string, value string"
         )
-        df.write.mode("overwrite").partitionBy("key").parquet(self.path)
+        df.sortWithinPartitions("key").write.mode("overwrite").parquet(self.path)
 
 
 def split_file_into_chunks(filepath: str, out_dir: str, chunk_size: int) -> list[str]:

@@ -734,6 +734,7 @@ _PRIORITY = (
     "embedding_near_dup",
     "embedding_dedup_clusters",
     "translated_near_dups",
+    "mr_wordcount",
 )
 QUERIES = {k: QUERIES[k] for k in _PRIORITY} | QUERIES
 

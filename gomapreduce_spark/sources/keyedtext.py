@@ -27,10 +27,10 @@ reference's per-task S3 GET.
 Scale notes: enumeration is a driver-side listing (exactly ListKeys);
 one partition per chunk gives Spark's scheduler the same task
 granularity the reference's M controls (jobConfig.go:10). The writer's
-one-file-per-key layout is API fidelity — at 100 TB use
-``df.write.partitionBy("key")`` (see mapreduce.PartitionedSink) —
-and is transactional per Spark's commit protocol: each task ATTEMPT
-writes to its own subdir of a job temp dir under the target, commit()
+one-file-per-key layout is API fidelity — at 100 TB write R key-sorted
+parquet files of ``key``/``value`` string columns, one per reduce
+partition (see mapreduce.PartitionedSink) — and is transactional per
+Spark's commit protocol: each task ATTEMPT writes to its own subdir of a job temp dir under the target, commit()
 renames only the files named in the winning attempts' commit messages
 into place, abort() removes the temp dir.
 """
@@ -310,8 +310,8 @@ def keyedtext_roundtrip_wordcount(
     one-file InputPartition costs a Python-worker task, so letting the
     file count scale with SF would just bench the task-launch overhead
     (measured: 200 files ≈ 14 s at sf0.1; 50 ≈ 4 s). The one-file-per-
-    key layout itself is API fidelity — the 100 TB form is
-    ``df.write.partitionBy("key")`` per the module docstring.
+    key layout itself is API fidelity — the 100 TB form is R
+    key-sorted files per the module docstring.
 
     The scratch dir is DETERMINISTIC PER (SESSION, INPUT, PARAMETERS)
     — keyed by the Spark applicationId (so concurrent drivers never

@@ -360,3 +360,82 @@ def test_clerk_client_stub(spark):
     ck.wait(req)
     ck.done(req)
     assert ck.status(999) is False
+
+
+ODD_KEYS = ["007", "7", "1.50", "", "a/b", "x=y", "%41", "a b"]
+
+
+class _KeysAsIs(DemoMapper):
+    """Emits each input value as an output key, counted once."""
+
+    def map(self, key, value, emitter):
+        emitter.emit(value, 1)
+
+
+def test_partitioned_sink_keys_round_trip(spark, tmp_path):
+    """Keys come back as the exact strings written — both through
+    flush (via submit) and through write_rdd — never type-inferred
+    ("007" and "7" as 7.0, "" as null) or path-mangled."""
+    from gomapreduce_spark.mapreduce.io import PartitionedSink
+
+    data = {f"k{i}": k for i, k in enumerate(ODD_KEYS)}
+    want = {(k, "1") for k in ODD_KEYS}
+    eng = MapReduceEngine(spark)
+    sink = PartitionedSink(str(tmp_path / "flushed"))
+    job_id = eng.submit(JobConfig(m=2, r=2), _KeysAsIs(), DemoReducer(),
+                        MemoryInputer(data), sink, sync=True)
+    eng.wait(job_id)
+    back = spark.read.parquet(sink.path).collect()
+    assert {(r["key"], r["value"]) for r in back} == want
+    assert len(back) == len(ODD_KEYS)
+
+    job = Job(JobConfig(m=2, r=2), _KeysAsIs(), DemoReducer(),
+              MemoryInputer(data), MemoryOutputer())
+    eng._stats[job.job_id] = JobStats()
+    direct = PartitionedSink(str(tmp_path / "direct"))
+    direct.write_rdd(spark, eng.run_rdd(job))
+    back = spark.read.parquet(direct.path).collect()
+    assert {(r["key"], r["value"]) for r in back} == want
+    assert len(back) == len(ODD_KEYS)
+
+
+def test_partitioned_sink_empty_result_overwrites(spark, tmp_path):
+    """A job with no output replaces the previous job's files at the
+    same path with an empty ``key, value`` dataset."""
+    from gomapreduce_spark.mapreduce.io import PartitionedSink
+
+    class Silent(DemoMapper):
+        def map(self, key, value, emitter):
+            pass
+
+    path = str(tmp_path / "out")
+    eng = MapReduceEngine(spark)
+    for mapper in (DemoMapper(), Silent()):
+        job_id = eng.submit(JobConfig(m=2, r=2), mapper, DemoReducer(),
+                            MemoryInputer(TEXT), PartitionedSink(path), sync=True)
+        eng.wait(job_id)
+    back = spark.read.parquet(path)
+    assert back.count() == 0
+    assert back.schema.simpleString() == "struct<key:string,value:string>"
+
+
+def test_spark_jobs_per_submit(spark, tmp_path):
+    """One submit is one Spark job for map + shuffle + reduce, plus one
+    write job for a PartitionedSink."""
+    from gomapreduce_spark.mapreduce.io import PartitionedSink
+
+    sc = spark.sparkContext
+    eng = MapReduceEngine(spark)
+    counts = []
+    for i, out in enumerate((MemoryOutputer(), PartitionedSink(str(tmp_path / "out")))):
+        group = f"jobs-per-submit-{i}"
+        sc.setJobGroup(group, "jobs per submit")
+        try:
+            job_id = eng.submit(JobConfig(m=3, r=2), DemoMapper(), DemoReducer(),
+                                MemoryInputer(TEXT), out, sync=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        eng.wait(job_id)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts == [1, 2]
