@@ -870,7 +870,11 @@ def canonical_docs(
     survivors subtree once per consumer). When given, it must carry
     the same ``quality`` values :func:`~..text.quality_expr` computes
     (parity test-pinned by the callers); extra columns ride through to
-    the output between doc_id and cluster_id.
+    the output between doc_id and cluster_id. A ``quality`` without a
+    ``doc_id`` or ``quality`` column raises ``ValueError``. Coverage
+    drift is NOT detected: a doc missing from ``quality`` is silently
+    absent from the output, and a doc only in ``quality`` is emitted as
+    a singleton.
 
     Scale shape: clusters come from the banded-LSH pipeline
     (:func:`dedup_clusters`), quality is a narrow scan, and the argmax
@@ -880,6 +884,10 @@ def canonical_docs(
     """
     from .text import quality_score
 
+    if quality is not None:
+        missing = [c for c in ("doc_id", "quality") if c not in quality.columns]
+        if missing:
+            raise ValueError(f"canonical_docs: precomputed quality lacks column(s) {missing}")
     clusters = dedup_clusters(docs, threshold)
     q = quality if quality is not None else quality_score(docs).select("doc_id", "quality")
     passthrough = [c for c in q.columns if c not in ("doc_id", "quality")]

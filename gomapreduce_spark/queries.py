@@ -99,6 +99,8 @@ def _mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mapper/Reducer/Inputer/Outputer path end-to-end (reference
     pkg_test.go:43-79 analog, with an actual output assertion via the
     oracle instead of completion-only)."""
+    import pyarrow as pa
+
     docs = load_table(spark, sf_dir, "documents")
     eng = MapReduceEngine(spark)
     out = MemoryOutputer()
@@ -111,9 +113,13 @@ def _mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         sync=True,
     )
     assert eng.status(job_id), "mapreduce job did not complete"
-    df = spark.createDataFrame(
-        [(k, int(v)) for k, v in out.results.items()], "word string, cnt long"
-    )
+    # an Arrow table plans as a JVM LocalTableScan; a Python list would
+    # run a Python worker stage to apply the schema
+    words = list(out.results)
+    df = spark.createDataFrame(pa.table({
+        "word": pa.array(words, pa.string()),
+        "cnt": pa.array([int(out.results[w]) for w in words], pa.int64()),
+    }))
     eng.done(job_id)
     return df
 

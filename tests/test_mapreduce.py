@@ -439,3 +439,15 @@ def test_spark_jobs_per_submit(spark, tmp_path):
         eng.wait(job_id)
         counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     assert counts == [1, 2]
+
+
+def test_mr_wordcount_result_runs_no_python_stage(spark, sf_small):
+    """The registered query's result is built from an Arrow table: a JVM
+    LocalTableScan, no PythonRDD in the executed lineage."""
+    from gomapreduce_spark.queries import QUERIES
+
+    df = QUERIES["mr_wordcount"](spark, sf_small)
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert df.schema.simpleString() == "struct<word:string,cnt:bigint>"
+    assert df.count() > 0

@@ -1158,6 +1158,18 @@ def test_canonical_docs_keeps_best_per_cluster(spark):
     assert out[1]["cluster_size"] == 3 and out[3]["cluster_size"] == 1
 
 
+def test_canonical_docs_rejects_quality_without_its_columns(spark):
+    import pytest
+
+    docs = spark.createDataFrame([(1, "some text here")], "doc_id long, text string")
+    for bad in (
+        spark.createDataFrame([(1, 0.5)], "doc_id long, score double"),
+        spark.createDataFrame([(1, 0.5)], "id long, quality double"),
+    ):
+        with pytest.raises(ValueError, match="precomputed quality lacks"):
+            dedup.canonical_docs(docs, quality=bad)
+
+
 def test_leakage_safe_split_is_cluster_atomic(spark, sf_med):
     """Near-duplicate documents must never straddle splits: every
     cluster maps to exactly one split, every doc is assigned, and all
