@@ -92,14 +92,13 @@ def adler32_partition(key: str, r: int) -> int:
 
 @dataclass
 class JobConfig:
-    """Per-job knobs, mirroring reference jobConfig.go:6-13."""
+    """Per-job knobs, mirroring reference jobConfig.go:6-13. The
+    reference config's input folder and output path belong here to the
+    job's ``Inputer`` and ``Outputer`` (``DirectoryInputer(folder)``,
+    ``PartitionedSink(path)``), so the config holds only parallelism."""
 
-    input_folder: str = ""
-    output_folder: str = ""
     m: int = 8            # map parallelism (reference: #input chunks)
     r: int = 8            # reduce partitions (reference: adler32 % R)
-    prechunked: bool = True
-    input_file: str = ""
 
 
 @dataclass

@@ -427,70 +427,83 @@ def shingle_arrays(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(shingle, "doc_id long, shingles array<string>")
 
 
+def _shingle_hashes(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """(doc_id, n_sh, sh_h): one row per distinct word ``n``-gram
+    shingle of each document, keyed by its 60-bit hash, with the doc's
+    distinct-shingle count ``n_sh`` riding every row. A doc with fewer
+    than ``n`` tokens has an empty shingle set and contributes no rows.
+
+    Joins on ``sh_h`` ship 8 bytes per shingle instead of its text.
+    ``n_sh`` is counted here, before any caller drops hot shingles, so
+    it stays the TRUE set size under a df cap (the one-sided argument
+    of :func:`_pair_intersections` rests on that). A caller that needs
+    no size selects it away; the optimizer then never computes it."""
+    return (
+        shingle_arrays(docs, n)
+        .select("doc_id", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle"))
+        .select("doc_id", "n_sh", h64(F.col("shingle")).alias("sh_h"))
+    )
+
+
+def _pair_intersections(sh: DataFrame, max_df: int | None, observation: str) -> DataFrame:
+    """(doc_a, doc_b, n_inter, size_a, size_b) for every pair doc_a <
+    doc_b sharing at least one shingle of a :func:`_shingle_hashes`
+    relation: a self-equi-join on ``sh_h`` and one pair-keyed
+    aggregate. The set sizes ride each row, so ``min`` recovers them
+    without a size-lookup re-join. Only pairs with a nonzero
+    intersection are ever materialized.
+
+    Hot-shingle cap: shingles present in more than ``max_df`` docs are
+    dropped before the pair join, by an anti-join on the shuffle key.
+    Without it the per-shingle pair fan-out is O(df²), and one
+    boilerplate shingle in a 1M-doc corpus explodes the join; with it
+    the fan-out is bounded by max_df·|shingles|. The cap is observed
+    under ``observation`` (``functions.skew.hot_keys``), never silent.
+    It is one-sided: ``size_a``/``size_b`` are the TRUE set sizes
+    (``n_sh`` predates the cap) and only ``n_inter`` shrinks, so a
+    similarity increasing in the intersection (Jaccard n/(A+B−n),
+    containment n/A) can only be UNDER-reported, never inflated.
+    ``max_df=None`` is the exact, uncapped join."""
+    if max_df is not None:
+        sh = sh.join(hot_keys(sh, ["sh_h"], max_df, observation), "sh_h", "left_anti")
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        a.join(b, (F.col("a.sh_h") == F.col("b.sh_h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(
+            F.count(F.lit(1)).alias("n_inter"),
+            F.min("a.n_sh").alias("size_a"),
+            F.min("b.n_sh").alias("size_b"),
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, threshold: float = 0.5, max_df: int | None = LSH_MAX_BUCKET
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
+    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle
+    (:func:`_pair_intersections` over :func:`_shingle_hashes`).
 
-    The shingle equi-join only materializes pairs with nonzero
-    intersection, and it joins on a 60-bit hash of the shingle, not the
-    string — the shuffle ships 8 bytes per shingle instead of the text.
-    |shingles(doc)| rides along each exploded shingle row (8 more
-    bytes) and is recovered per pair with a min() aggregate, so the
-    shingle table is consumed exactly ONCE — no cache, no size-lookup
-    re-join.
-
-    Hot-shingle backstop (the :func:`containment_pairs` mechanism):
-    shingles present in more than ``max_df`` docs are dropped BEFORE
-    the pair join via an anti-join on the existing shuffle key —
-    without it the per-shingle pair fan-out is O(df²) and one
-    boilerplate shingle in a 1M-doc corpus explodes the join. The cap
-    is observed (``jaccard_hot_shingles``), never silent, and
-    one-sided by construction: denominators use the TRUE set sizes
-    (``n_sh`` is computed before the cap) and jaccard
-    n/(A+B−n) is increasing in n, so a capped intersection can only
-    UNDER-report similarity, never inflate it. At 100 TB this still
-    runs best *after* LSH candidate generation; the cap is the
-    standalone backstop that bounds fan-out by max_df·|shingles|.
-    ``max_df=None`` disables the cap — TRUE exact Jaccard for
+    Shingles present in more than ``max_df`` docs are dropped before
+    the pair join, observed as ``jaccard_hot_shingles``; the cap can
+    only UNDER-report similarity. At 100 TB this still runs best
+    *after* LSH candidate generation; the cap is the standalone
+    backstop. ``max_df=None`` disables the cap — TRUE exact Jaccard for
     verification on bounded inputs (what :func:`dedup_recall_audit`
     uses for its ground truth, so the audit can never inherit the very
     approximation it certifies).
     """
-    # materialized ONCE (24 B/row compact form): a self-join computes
-    # each side's subtree independently — without this the Arrow
-    # shingle pass runs twice. localCheckpoint, not cache: anonymous
-    # blocks the ContextCleaner reclaims when the plan is GC'd, so
-    # repeated calls in a long session don't accumulate pinned memory.
-    # Pre-partitioned on sh_h BEFORE the checkpoint. Honest plan note
-    # (r9 executed-plan audit): alias re-analysis re-keys the
+    # materialized ONCE: a self-join computes each side's subtree
+    # independently — without this the Arrow shingle pass runs twice.
+    # localCheckpoint, not cache: anonymous blocks the ContextCleaner
+    # reclaims when the plan is GC'd, so repeated calls in a long
+    # session don't accumulate pinned memory. Pre-partitioned on sh_h
+    # (worth ~0.2 s at sf0.1). Alias re-analysis re-keys the
     # checkpointed attributes, so the hot-df aggregate + anti-join
-    # subtree still runs once PER pair-join side — duplicated work
-    # over the compact relation, measured CHEAPER than eliminating it
-    # with a second checkpoint barrier (1.7 s vs 2.2 s at sf0.1), and
-    # the pre-partition is still worth ~0.2 s. Total cap cost vs the
-    # uncapped form: +15 % interleaved matched-calib (SCALE.md r9).
-    sh = (
-        shingle_arrays(docs)
-        .where(F.size("shingles") > 0)
-        .select("doc_id", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle"))
-        .select("doc_id", "n_sh", h64(F.col("shingle")).alias("sh_h"))
-        .repartition(F.col("sh_h"))
-    ).localCheckpoint()
-    if max_df is None:
-        shc = sh
-    else:
-        shc = sh.join(hot_keys(sh, ["sh_h"], max_df, "jaccard_hot_shingles"), "sh_h", "left_anti")
-    a, b = shc.alias("a"), shc.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh_h") == F.col("b.sh_h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(
-            F.count("*").alias("n_inter"),
-            F.min("a.n_sh").alias("size_a"),  # true size: n_sh predates the cap
-            F.min("b.n_sh").alias("size_b"),
-        )
-    )
+    # still runs once PER pair-join side — measured cheaper than a
+    # second checkpoint barrier (1.7 s vs 2.2 s at sf0.1).
+    sh = _shingle_hashes(docs).repartition(F.col("sh_h")).localCheckpoint()
+    inter = _pair_intersections(sh, max_df, "jaccard_hot_shingles")
     return (
         inter.withColumn(
             "jaccard",
@@ -712,6 +725,47 @@ def _driver_union_find(rows: list) -> dict:
     return {v: find(v) for v in parent}
 
 
+def _near_dup_edges(docs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the near-dup graph — the
+    :func:`minhash_lsh_pairs` candidates whose estimated Jaccard
+    reaches ``threshold``. Every graph operator here reads this
+    thresholded sliver of the corpus, never the corpus itself."""
+    return (
+        minhash_lsh_pairs(docs)
+        .where(F.col("est_jaccard") >= threshold)
+        .select("doc_a", "doc_b")
+    )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(src, dst): every edge of a two-column edge list in both
+    directions, so one join on ``dst`` reaches all of a node's
+    neighbours."""
+    a, b = edges.columns
+    return edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
+        edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+    )
+
+
+def _with_group_size(df: DataFrame, key: str, name: str) -> DataFrame:
+    """``df`` plus a column ``name``: the number of rows sharing the
+    row's ``key`` value, counted over a window partitioned by ``key``.
+    One exchange serves both the count and the output rows; an
+    aggregate joined back would pay the key shuffle twice plus a join.
+
+    SKEW HAZARD: the window puts every row of one group in ONE task,
+    and AQE's skew split does not apply to windows. The groups here are
+    components or communities of a near-dup graph, which can grow one
+    giant component (a boilerplate megacluster). The inputs are label
+    relations of the already-reduced pair graph, orders of magnitude
+    under the corpus, so this holds until a single group approaches a
+    task's memory. The fallback for that point — the aggregate joined
+    back by broadcast (the sizes relation is small) or a salted
+    two-level count (``functions.skew``) — belongs here, in this one
+    place, for every cluster-size caller."""
+    return df.select("*", F.count(F.lit(1)).over(W.partitionBy(key)).alias(name))
+
+
 def connected_components(
     edges: DataFrame,
     graph_partitions: int = 4,
@@ -761,13 +815,7 @@ def connected_components(
             list(labels.items()), "doc_id long, cluster_id long"
         ).repartition(graph_partitions)
         return out, 0
-    und = (
-        edges.toDF("doc_a", "doc_b")
-        .union(edges.toDF("doc_b", "doc_a").select("doc_a", "doc_b"))
-        .toDF("src", "dst")
-        .coalesce(graph_partitions)
-        .localCheckpoint()
-    )
+    und = _undirected(edges).coalesce(graph_partitions).localCheckpoint()
     labels = (
         und.select(F.col("src").alias("doc_id")).distinct().withColumn("cluster_id", F.col("doc_id"))
     ).coalesce(graph_partitions).localCheckpoint()
@@ -821,29 +869,11 @@ def dedup_clusters(docs: DataFrame, threshold: float = 0.5, graph_partitions: in
     cluster near-duplicates, keep one representative per cluster.
     Component search is :func:`connected_components` (min-label
     propagation + pointer doubling, O(log diameter) rounds)."""
-    pairs = minhash_lsh_pairs(docs).where(F.col("est_jaccard") >= threshold)
     # the pair graph is tiny relative to the corpus (near-dups are the
     # exception) — coalesced inside connected_components so each
     # round's jobs don't pay 32 near-empty tasks
-    labels, _ = connected_components(pairs.select("doc_a", "doc_b"), graph_partitions)
-    # cluster_size as a count window over cluster_id instead of a
-    # groupBy + self-join: one exchange serves both the count and the
-    # output rows (optimization r14, guide §2.4 — the aggregate+rejoin
-    # paid the cluster_id shuffle twice plus a join).
-    # SKEW HAZARD at production scale (guide §2.5): the window puts
-    # every row of a cluster in ONE task, and connected-component
-    # graphs can grow a giant component (boilerplate megacluster). AQE
-    # skew-split does NOT apply to windows. The aggregate+broadcast-
-    # rejoin shape (sizes relation is tiny, AQE broadcasts it) or a
-    # salted two-level count is the deployment fallback when any
-    # single cluster approaches a task's memory — same doctrine as the
-    # LSH hot-bucket cap above; here the labels relation is the
-    # already-reduced pair graph, orders of magnitude under the corpus.
-    return labels.select(
-        "doc_id",
-        "cluster_id",
-        F.count(F.lit(1)).over(W.partitionBy("cluster_id")).alias("cluster_size"),
-    )
+    labels, _ = connected_components(_near_dup_edges(docs, threshold), graph_partitions)
+    return _with_group_size(labels, "cluster_id", "cluster_size")
 
 
 def canonical_docs(
@@ -860,13 +890,13 @@ def canonical_docs(
     downstream can materialize either the kept corpus or a removal
     report.
 
-    ``quality`` (optional, optimization r15): a precomputed
+    ``quality`` (optional): a precomputed
     (doc_id, quality[, extra passthrough columns...]) relation covering
     EXACTLY the docs to emit. Composed pipelines (corpus_dedup_e2e /
     corpus_ingest_e2e / doc_provenance) already pay a narrow corpus
     scan for their own bookkeeping; letting them hand the quality
     column in on that relation removes a second full tokenizing scan
-    of the corpus (guide §2.3 — the quality expr re-expanded the whole
+    of the corpus (the quality expr would re-expand the whole
     survivors subtree once per consumer). When given, it must carry
     the same ``quality`` values :func:`~..text.quality_expr` computes
     (parity test-pinned by the callers); extra columns ride through to
@@ -879,8 +909,9 @@ def canonical_docs(
     Scale shape: clusters come from the banded-LSH pipeline
     (:func:`dedup_clusters`), quality is a narrow scan, and the argmax
     is one row_number window partitioned by cluster_id — cluster sizes
-    are bounded by near-dup group sizes (AQE-split if a boilerplate
-    cluster explodes), never corpus-sized.
+    are bounded by near-dup group sizes, never corpus-sized, but a
+    giant component still lands in one task (the skew hazard of
+    :func:`_with_group_size`).
     """
     from .text import quality_score
 
@@ -902,6 +933,23 @@ def canonical_docs(
     return joined.withColumn("keep", F.row_number().over(w) == 1)
 
 
+def _split_assignment(cluster_col: str, test_pct: int = 10, val_pct: int = 10):
+    """(bucket, split) Columns of the cluster-atomic split: ``bucket``
+    is the 60-bit md5 hash of the cluster id mod 100 (cross-engine
+    reproducible — the same contract as every fingerprint here — so the
+    split is stable run-to-run and engine-to-engine); ``split`` is
+    "test" below ``test_pct``, "validation" below ``test_pct +
+    val_pct``, else "train". A row's split depends only on its cluster
+    id, so every document of a cluster lands in the same split."""
+    bucket = F.pmod(h64(F.col(cluster_col), seed="split:"), F.lit(100))
+    split = (
+        F.when(bucket < test_pct, "test")
+        .when(bucket < test_pct + val_pct, "validation")
+        .otherwise("train")
+    )
+    return bucket, split
+
+
 def leakage_safe_split(
     docs: DataFrame, test_pct: int = 10, val_pct: int = 10, threshold: float = 0.5
 ) -> DataFrame:
@@ -911,29 +959,21 @@ def leakage_safe_split(
     test example can never have a near-copy in training (the classic
     eval-leakage failure a naive per-doc hash split ships).
 
-    Assignment is a deterministic 60-bit md5 hash of the cluster id
-    bucketed mod 100 (cross-engine reproducible — the same contract as
-    every fingerprint here), so the split is stable run-to-run and
-    engine-to-engine. Unclustered docs are their own singleton cluster.
+    Assignment is :func:`_split_assignment` of the cluster id.
+    Unclustered docs are their own singleton cluster.
 
     Scale shape: clusters come from the banded-LSH pipeline, the join
     back to docs is one keyed shuffle, the hash is a narrow projection.
     """
     # connected components directly — dedup_clusters would also compute
     # per-cluster sizes this query never reads
-    pairs = minhash_lsh_pairs(docs).where(F.col("est_jaccard") >= threshold)
-    labels, _ = connected_components(pairs.select("doc_a", "doc_b"))
+    labels, _ = connected_components(_near_dup_edges(docs, threshold))
     base = (
         docs.select("doc_id")
         .join(labels.withColumnRenamed("cluster_id", "cid"), "doc_id", "left")
         .select("doc_id", F.coalesce("cid", F.col("doc_id")).alias("cluster_id"))
     )
-    bucket = F.pmod(h64(F.col("cluster_id"), seed="split:"), F.lit(100))
-    split = (
-        F.when(bucket < test_pct, "test")
-        .when(bucket < test_pct + val_pct, "validation")
-        .otherwise("train")
-    )
+    bucket, split = _split_assignment("cluster_id", test_pct, val_pct)
     return base.select(
         "doc_id", "cluster_id", bucket.cast("long").alias("bucket"), split.alias("split")
     )
@@ -1407,15 +1447,9 @@ def benchmark_overlap(docs: DataFrame, bench_mod: int = 43, min_hits: int = 2) -
     contamination manifest: per flagged doc, how many distinct shingles
     hit and how many benchmark docs they touch.
     """
-    sh = (
-        shingle_arrays(docs)
-        .where(F.size("shingles") > 0)
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-        .select("doc_id", h64(F.col("shingle")).alias("sh_h"))
-        # consumed by both branches below; localCheckpoint (anonymous,
-        # ContextCleaner-reclaimed) so the Arrow shingle pass runs once
-        .localCheckpoint()
-    )
+    # consumed by both branches below; localCheckpoint (anonymous,
+    # ContextCleaner-reclaimed) so the Arrow shingle pass runs once
+    sh = _shingle_hashes(docs).select("doc_id", "sh_h").localCheckpoint()
     bench = sh.where(F.col("doc_id") % bench_mod == 0).select(
         F.col("doc_id").alias("bench_id"), "sh_h"
     )
@@ -1446,16 +1480,8 @@ def embedding_dedup_clusters(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     labels, _ = connected_components(pairs, graph_partitions)
-    # count window over cluster_id instead of groupBy + self-join —
-    # one exchange instead of two plus a join (guide §2.4). Same skew
-    # hazard + fallback as dedup_clusters: a giant semantic cluster
-    # lands in one window task (AQE can't split windows) — revert to
-    # aggregate + broadcast rejoin or a salted two-level count if one
-    # component approaches task memory.
-    return labels.select(
-        F.col("doc_id").alias("vec_id"),
-        "cluster_id",
-        F.count(F.lit(1)).over(W.partitionBy("cluster_id")).alias("cluster_size"),
+    return _with_group_size(
+        labels.withColumnRenamed("doc_id", "vec_id"), "cluster_id", "cluster_size"
     )
 
 
@@ -1485,12 +1511,7 @@ def pagerank_dedup_graph(
     on src and the aggregation is one partial-agg shuffle keyed on dst,
     the same per-round cost envelope as connected_components. Iteration
     count is fixed, lineage stays O(iters)."""
-    pairs = minhash_lsh_pairs(docs).where(F.col("est_jaccard") >= threshold)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint()
-    )
+    edges = _undirected(_near_dup_edges(docs, threshold)).localCheckpoint()
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     edges_deg = edges.join(deg, "src").localCheckpoint()
     n_df = deg.agg(F.count("*").cast("double").alias("n_nodes"))
@@ -1533,17 +1554,12 @@ def ngram_novelty(docs: DataFrame, n: int = SHINGLE_N, batch_mod: int = 5) -> Da
     side LEFT JOINs it on the same key and aggregates per doc. The
     batch is small by definition, so its side of the join broadcasts
     under AQE."""
-    # localCheckpoint (optimization r15, guide §2.4/§4): the corpus and
-    # batch sides both filter sh on doc_id, but a mapInPandas is opaque
-    # to Catalyst, so the filters cannot push below the shingle pass —
-    # without the checkpoint BOTH subtrees ran the full-corpus Arrow
-    # shingle pass (2 Python stages over all docs, observed in the r15
-    # census). One pass, both consumers read the checkpoint.
-    sh = (
-        shingle_arrays(docs, n)
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-        .select("doc_id", h64(F.col("shingle")).alias("sh_h"))
-    ).localCheckpoint()
+    # the corpus and batch sides both filter sh on doc_id, but a
+    # mapInPandas is opaque to Catalyst, so the filters cannot push
+    # below the shingle pass — without the checkpoint BOTH subtrees run
+    # the full-corpus Arrow shingle pass. One pass, both consumers read
+    # the checkpoint.
+    sh = _shingle_hashes(docs, n).select("doc_id", "sh_h").localCheckpoint()
     is_new = F.col("doc_id") % batch_mod == 0
     corpus = sh.where(~is_new).select("sh_h").distinct()
     new = sh.where(is_new)
@@ -1575,12 +1591,7 @@ def triangle_stats(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     candidates only), the triple join is equi-keyed on node ids, and
     the worst case is bounded by the hot-bucket cap documented for the
     LSH stage — the classic node-iterator triangle join."""
-    e = (
-        minhash_lsh_pairs(docs)
-        .where(F.col("est_jaccard") >= threshold)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint()
-    )
+    e = _near_dup_edges(docs, threshold).toDF("a", "b").localCheckpoint()
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.b") == F.col("e2.a"))
@@ -1824,34 +1835,14 @@ def containment_pairs(
     where EITHER direction ≥ ``threshold`` survive, with both values
     reported (which side is the subset is the point).
 
-    Same dataflow contract as :func:`ngram_jaccard_pairs` (one Arrow
-    shingle pass, 60-bit-hash equi-join, |shingle set| rides each row
-    so one min() recovers it), plus the hot-shingle df cap the jaccard
-    form documents as its trade-off: shingles present in more than
-    ``max_df`` docs are dropped BEFORE the pair join (anti-join on the
-    existing shuffle key), bounding pair fan-out by max_df·|shingles| —
-    never silently, via the ``containment_hot_shingles`` observation.
-    Denominators stay the TRUE set sizes (computed before the cap), so
-    a capped intersection can only under-report containment, never
-    inflate it. At 100 TB this runs after LSH candidate generation
-    like its jaccard sibling; the cap is the standalone backstop."""
-    sh = (
-        shingle_arrays(docs)
-        .where(F.size("shingles") > 0)
-        .select("doc_id", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle"))
-        .select("doc_id", "n_sh", h64(F.col("shingle")).alias("sh_h"))
-    ).localCheckpoint()
-    shc = sh.join(hot_keys(sh, ["sh_h"], max_df, "containment_hot_shingles"), "sh_h", "left_anti")
-    a, b = shc.alias("a"), shc.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh_h") == F.col("b.sh_h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.min("a.n_sh").alias("size_a"),  # true size: n_sh predates the cap
-            F.min("b.n_sh").alias("size_b"),
-        )
-    )
+    Same dataflow as :func:`ngram_jaccard_pairs`
+    (:func:`_pair_intersections` over :func:`_shingle_hashes`), with
+    the hot-shingle df cap observed as ``containment_hot_shingles``; a
+    capped intersection can only under-report containment. At 100 TB
+    this runs after LSH candidate generation like its jaccard sibling;
+    the cap is the standalone backstop."""
+    sh = _shingle_hashes(docs).localCheckpoint()
+    inter = _pair_intersections(sh, max_df, "containment_hot_shingles")
     out = inter.select(
         "doc_a",
         "doc_b",
@@ -1920,15 +1911,7 @@ def lpa_communities(docs: DataFrame, threshold: float = 0.5, iters: int = 3) -> 
     (node, label) partial agg + a per-node top-1 window, with
     localCheckpoint truncating lineage per round (iterative-join
     doctrine shared with pagerank_dedup_graph)."""
-    edges = (
-        minhash_lsh_pairs(docs)
-        .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
-    und = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).toDF("src", "dst")
+    und = _undirected(_near_dup_edges(docs, threshold).localCheckpoint())
     labels = (
         und.select(F.col("src").alias("doc_id")).distinct().withColumn("label", F.col("doc_id"))
     )
@@ -1946,14 +1929,8 @@ def lpa_communities(docs: DataFrame, threshold: float = 0.5, iters: int = 3) -> 
             .select("doc_id", (-F.col("m.neg")).alias("label"))
             .localCheckpoint()
         )
-    # member count as a window over the final labels instead of a
-    # groupBy + self-join — one exchange instead of two plus a join
-    # (guide §2.4; the dedup_clusters idiom, including its documented
-    # giant-community skew hazard and aggregate+broadcast fallback)
-    return labels.select(
-        "doc_id",
-        F.col("label").alias("community"),
-        F.count(F.lit(1)).over(W.partitionBy("label")).cast("long").alias("n_members"),
+    return _with_group_size(labels, "label", "n_members").select(
+        "doc_id", F.col("label").alias("community"), "n_members"
     )
 
 
@@ -1987,10 +1964,10 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5, observation=None) -> D
     against never enters the join.
 
     Scale shape: the shingle Arrow pass runs ONCE into a compact
-    (doc_id, n_sh, tok_h) relation, pre-partitioned on tok_h and
+    (doc_id, n_sh, sh_h) relation, pre-partitioned on sh_h and
     localCheckpointed; df comes from a count-over-window on that
-    same tok_h clustering (no second exchange, no join). Prefix
-    extraction is one doc_id window (row_number over (df, tok_h));
+    same sh_h clustering (no second exchange, no join). Prefix
+    extraction is one doc_id window (row_number over (df, sh_h));
     the checkpointed prefix relation feeds both sides of the
     candidate equi-join, whose fan-out is bounded by rare-shingle
     collisions instead of corpus df — observed, never silent, via the
@@ -2045,33 +2022,27 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5, observation=None) -> D
     # emission, so the rounding boundary can never cost a pair.
     hm = max(0, 2 * t_micro - 1)  # t_eff numerator over HM_D
     HM_D = 2_000_000
-    tok = (
-        shingle_arrays(docs)
-        .where(F.size("shingles") > 0)
-        .select("doc_id", F.size("shingles").alias("n_tok"), F.explode("shingles").alias("token"))
-        .select("doc_id", "n_tok", h64(F.col("token")).alias("tok_h"))
-        .repartition(F.col("tok_h"))
-    ).localCheckpoint()
-    # df via count-over-window on the tok_h clustering the checkpoint
+    sh = _shingle_hashes(docs).repartition(F.col("sh_h")).localCheckpoint()
+    # df via count-over-window on the sh_h clustering the checkpoint
     # already carries — measured ~25 % faster than the equivalent
     # groupBy(df)+join-back at sf0.1 (one exchange instead of two, no
     # join); the window partition is one shingle's posting list, so
     # its size is bounded by corpus df exactly like the aggregate's
-    # prefix length L = n_tok - ceil(t_eff*n_tok) + 1, all-integer
+    # prefix length L = n_sh - ceil(t_eff*n_sh) + 1, all-integer
     prefix = (
-        tok.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("tok_h")))
+        sh.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("sh_h")))
         .withColumn(
             "pos",
-            F.row_number().over(W.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("tok_h"))),
+            F.row_number().over(W.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("sh_h"))),
         )
         .where(
             F.col("pos")
-            <= F.col("n_tok")
-            - F.expr(f"(n_tok * {hm}L + {HM_D - 1}L) div {HM_D}L")
+            <= F.col("n_sh")
+            - F.expr(f"(n_sh * {hm}L + {HM_D - 1}L) div {HM_D}L")
             + F.lit(1)
         )
-        .select("doc_id", "n_tok", "pos", "tok_h")
-        .repartition(F.col("tok_h"))
+        .select("doc_id", "n_sh", "pos", "sh_h")
+        .repartition(F.col("sh_h"))
     ).localCheckpoint()
     a, b = prefix.alias("a"), prefix.alias("b")
     # PPJoin positional filter: required overlap α = ceil(t_eff(|x|+|y|)/(1+t_eff));
@@ -2083,27 +2054,27 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5, observation=None) -> D
     # (α = (hm(na+nb) + (HM_D+hm) - 1) div (HM_D+hm) in half-micro
     # units; products ≤ 4e12 « 2^53, so the double division is exact).
     alpha = F.floor(
-        (F.lit(hm) * (F.col("a.n_tok") + F.col("b.n_tok")) + F.lit(HM_D + hm - 1))
+        (F.lit(hm) * (F.col("a.n_sh") + F.col("b.n_sh")) + F.lit(HM_D + hm - 1))
         / F.lit(HM_D + hm)
     ).cast("long")
     cand = (
         a.join(
             b,
-            (F.col("a.tok_h") == F.col("b.tok_h"))
+            (F.col("a.sh_h") == F.col("b.sh_h"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             # size filter: t_eff*|x| <= |y| and t_eff*|y| <= |x| (half-micro)
-            & (F.col("b.n_tok") * F.lit(HM_D) >= F.col("a.n_tok") * F.lit(hm))
-            & (F.col("a.n_tok") * F.lit(HM_D) >= F.col("b.n_tok") * F.lit(hm))
+            & (F.col("b.n_sh") * F.lit(HM_D) >= F.col("a.n_sh") * F.lit(hm))
+            & (F.col("a.n_sh") * F.lit(HM_D) >= F.col("b.n_sh") * F.lit(hm))
             & (
                 F.lit(1)
                 + F.least(
-                    F.col("a.n_tok") - F.col("a.pos"), F.col("b.n_tok") - F.col("b.pos")
+                    F.col("a.n_sh") - F.col("a.pos"), F.col("b.n_sh") - F.col("b.pos")
                 )
                 >= alpha
             ),
         )
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.min("a.n_tok").alias("n_a"), F.min("b.n_tok").alias("n_b"))
+        .agg(F.min("a.n_sh").alias("n_a"), F.min("b.n_sh").alias("n_b"))
         # candidate volume rides the plan as a named CollectMetrics by
         # default (no-silent rule); tests pass a pyspark Observation to
         # read the count directly and prove the prefix filter engages
@@ -2112,11 +2083,10 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5, observation=None) -> D
             F.count(F.lit(1)).alias("n_candidates"),
         )
     )
-    ta = tok.select(F.col("doc_id").alias("doc_a"), "tok_h")
-    tb = tok.select(F.col("doc_id").alias("doc_b"), "tok_h")
-    # Verify-stage width investigated and left to AQE (r15 negative
-    # result, guide §2.5/§3.1): the stage reads the byte-tiny candidate
-    # manifest coalesced to ~2 tasks, which LOOKS starved — but the
+    ta = sh.select(F.col("doc_id").alias("doc_a"), "sh_h")
+    tb = sh.select(F.col("doc_id").alias("doc_b"), "sh_h")
+    # Verify-stage width is left to AQE: the stage reads the byte-tiny
+    # candidate manifest coalesced to ~2 tasks, which LOOKS starved — but the
     # stage cost is dominated by building the two broadcast token
     # relations per task, so forcing it wide with an explicit
     # repartition made it slower (1.42 s over 32 tasks vs 1.04 s over
@@ -2126,7 +2096,7 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5, observation=None) -> D
     # carries real bytes and AQE sizes the stage accordingly.
     inter = (
         cand.join(ta, "doc_a")
-        .join(tb, ["doc_b", "tok_h"])
+        .join(tb, ["doc_b", "sh_h"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"), F.min("n_a").alias("n_a"), F.min("n_b").alias("n_b"))
     )

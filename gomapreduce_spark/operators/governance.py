@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import h64
-from .dedup import canonical_docs, synth_corpus_snapshot
+from .dedup import _split_assignment, canonical_docs, synth_corpus_snapshot
 from .text import gopher_keep_expr, quality_expr, quality_keep_expr
 from .web import (
     DEFAULT_BLOCKLIST,
@@ -37,17 +37,43 @@ from .web import (
 )
 
 
-def _split_col(cluster_col: str, test_pct: int = 10, val_pct: int = 10):
-    """Split column from a cluster-id column — the SAME deterministic
-    assignment as dedup.leakage_safe_split (60-bit md5 of the cluster
-    id, mod 100), restated here so the manifest and e2e row reuse the
-    cluster labels they already have instead of re-running connected
-    components (test_governance pins the derivation equal)."""
-    bucket = F.pmod(h64(F.col(cluster_col), seed="split:"), F.lit(100))
-    return (
-        F.when(bucket < test_pct, "test")
-        .when(bucket < test_pct + val_pct, "validation")
-        .otherwise("train")
+def _dedup_certification(docs: DataFrame, keyed: DataFrame, threshold: float) -> DataFrame:
+    """The dedup half of both certification rows, as one 1-row
+    aggregate over ``keyed``, a (doc_id, content_hash, quality)
+    relation of the documents admitted so far: exact-dedup survivors →
+    :func:`~.dedup.canonical_docs` → the cluster-atomic split. Columns
+    n_exact_survivors, n_near_dup_docs, n_near_dup_clusters,
+    n_canonical_kept, n_train, n_validation, n_test.
+
+    The survivors are ``keep_ids``, arithmetically
+    exact_dedup(admitted)'s keep_id (same h64(text) key, same
+    min(doc_id)), taken from ``keyed``'s hash column, so no second text
+    scan. ``quality`` enters canonical_docs through its
+    precomputed-quality input, so the survivors are not tokenized
+    again. The split reuses the cluster labels canonical_docs already
+    has instead of re-running connected components."""
+    keep_ids = keyed.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
+    canon = canonical_docs(
+        docs.join(keep_ids, "doc_id"),
+        threshold,
+        quality=keyed.join(keep_ids, "doc_id").select("doc_id", "quality"),
+    )
+    _, split = _split_assignment("cluster_id")
+    enriched = canon.withColumn("split", split)
+
+    def kept_in(name: str):
+        return (F.col("keep") & (F.col("split") == name)).cast("long")
+
+    return enriched.agg(
+        F.count(F.lit(1)).alias("n_exact_survivors"),
+        F.sum((F.col("cluster_size") >= 2).cast("long")).alias("n_near_dup_docs"),
+        F.count_distinct(
+            F.when(F.col("cluster_size") >= 2, F.col("cluster_id"))
+        ).alias("n_near_dup_clusters"),
+        F.sum(F.col("keep").cast("long")).alias("n_canonical_kept"),
+        F.sum(kept_in("train")).alias("n_train"),
+        F.sum(kept_in("validation")).alias("n_validation"),
+        F.sum(kept_in("test")).alias("n_test"),
     )
 
 
@@ -86,21 +112,18 @@ def doc_provenance(
     joins — and it is the artifact that makes the whole corpus
     auditable."""
     bl = DEFAULT_BLOCKLIST if blocklist is None else blocklist
-    # Scan/shuffle layout (optimization r15, guide §2.3/§2.4, closing
-    # the r14 local regression): the old-text-hash scan carries ONLY
-    # the text-dependent columns (h_old + the quality composite), and
-    # the joined manifest relation is handed straight into
-    # canonical_docs as its quality side (the precomputed-quality
-    # passthrough contract) — so canonical_docs runs NO second
-    # tokenizing corpus scan and the manifest needs no extra doc_id
-    # join to pick up the cluster columns. The url / canonical_url /
-    # registered_domain expressions are functions of (doc_id, source)
-    # ONLY, so they are projected AFTER the joins and the keep-window:
-    # the r14 shape computed them on the scan, which dragged three
-    # derived url strings through every exchange and the window sort
-    # (the measured r14 regression); here only the 8-byte doc_id and
-    # the short source ride the shuffles and the regex work happens
-    # once per output row with nothing downstream of it.
+    # Scan/shuffle layout: the old-text-hash scan carries ONLY the
+    # text-dependent columns (h_old + the quality composite), and the
+    # joined manifest relation is handed straight into canonical_docs
+    # as its quality side (the precomputed-quality passthrough
+    # contract) — so canonical_docs runs NO second tokenizing corpus
+    # scan and the manifest needs no extra doc_id join to pick up the
+    # cluster columns. The url / canonical_url / registered_domain
+    # expressions are functions of (doc_id, source) ONLY, so they are
+    # projected AFTER the joins and the keep-window: computed on the
+    # scan, they would drag three derived url strings through every
+    # exchange and the window sort (a measured regression); here only
+    # the 8-byte doc_id and the short source ride the shuffles.
     # per-doc snapshot status: LEFT join old→new on doc_id (the fresh
     # docs the synth crawl ADDS have ids ≥ 2^60 and can't match, so
     # an old doc is removed / changed / unchanged, never 'added')
@@ -126,7 +149,7 @@ def doc_provenance(
     canon = canonical_docs(docs, threshold, quality=snap)
     url = synth_url_expr()
     canon_url = canonical_url_expr(url)
-    split = _split_col("cluster_id")
+    _, split = _split_assignment("cluster_id")
     out = (
         canon.withColumnRenamed("keep", "is_canonical")
         .withColumn("url", url)
@@ -177,46 +200,21 @@ def corpus_dedup_e2e(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     drift (schema, null handling, coalesce semantics) breaks the
     count chain even when every stage is green in isolation.
 
-    Scale shape (optimization r15, guide §2.3/§5): ONE narrow
-    (doc_id, content_hash, quality) pre-pass over the corpus is
-    checkpointed and feeds BOTH derived needs — the exact-dedup
-    keep_ids (a groupBy on the checkpointed hash, no second text
-    scan; arithmetically exact_dedup's keep_id: same h64(text) key,
-    same min(doc_id), filter-free input) and canonical_docs' quality
-    side (its precomputed-quality contract, no second tokenizing
-    scan). The former shape re-expanded the survivors subtree
-    (corpus ⋈ keep_ids over a full corpus hash-aggregate) once per
-    consumer — quality_score and the LSH pipeline each paid it. The
-    LSH subtree still reads text once (signatures need it); the
-    certification itself is two single-row aggregates cross-joined
-    (broadcast of 1 row) and unpivoted with stack() — the output is
-    8 rows at any corpus size. The checkpoint is ~24 B/doc — the
-    flag-relation doctrine from corpus_ingest_e2e."""
+    Scale shape: ONE narrow (doc_id, content_hash, quality) pre-pass
+    over the corpus is checkpointed (~24 B/doc) and feeds both the
+    exact-dedup survivors and canonical_docs' quality side
+    (:func:`_dedup_certification`); without it the survivors subtree
+    (corpus ⋈ keep_ids over a full corpus hash-aggregate) re-expands
+    once per consumer. The LSH subtree still reads text once
+    (signatures need it); the certification itself is two single-row
+    aggregates cross-joined (broadcast of 1 row) and unpivoted with
+    stack() — the output is 8 rows at any corpus size."""
     narrow = docs.select(
         "doc_id",
         h64(F.col("text")).alias("content_hash"),
         quality_expr().alias("quality"),
     ).localCheckpoint()
-    keep_ids = narrow.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-    survivors = docs.join(keep_ids.select("doc_id"), "doc_id")
-    canon = canonical_docs(
-        survivors,
-        threshold,
-        quality=narrow.join(keep_ids.select("doc_id"), "doc_id").select("doc_id", "quality"),
-    )
-    split = _split_col("cluster_id")
-    enriched = canon.withColumn("split", split)
-    stages = enriched.agg(
-        F.count(F.lit(1)).alias("n_exact_survivors"),
-        F.sum((F.col("cluster_size") >= 2).cast("long")).alias("n_near_dup_docs"),
-        F.count_distinct(
-            F.when(F.col("cluster_size") >= 2, F.col("cluster_id"))
-        ).alias("n_near_dup_clusters"),
-        F.sum(F.col("keep").cast("long")).alias("n_canonical_kept"),
-        F.sum((F.col("keep") & (F.col("split") == "train")).cast("long")).alias("n_train"),
-        F.sum((F.col("keep") & (F.col("split") == "validation")).cast("long")).alias("n_validation"),
-        F.sum((F.col("keep") & (F.col("split") == "test")).cast("long")).alias("n_test"),
-    )
+    stages = _dedup_certification(docs, narrow, threshold)
     # the input total deliberately re-scans rather than reusing the
     # exact-dedup aggregate: sum(n_copies) LOOKS free, but column
     # pruning specializes the two hash-agg subtrees differently
@@ -279,40 +277,27 @@ def corpus_ingest_e2e(
     blocklist_filter / gopher_rules / quality_classifier project), so
     a semantics change in any stage changes this row.
 
-    Scale shape (optimization r14, guide §2.3/§2.4): the admission
-    flags are narrow scalar expressions, so ALL THREE ride ONE scan
-    into the checkpointed (doc_id, 3 booleans) flag relation — the
-    former shape computed them in three separate corpus scans (two of
-    which tokenized the corpus independently) and re-attached them
-    with three doc_id-keyed joins before the same checkpoint; one
+    Scale shape: the admission flags are narrow scalar expressions, so
+    ALL THREE ride ONE scan into the checkpointed flag relation; one
     combined projection tokenizes ONCE (the gopher and classifier
     token exprs are identical subtrees, eliminated by codegen CSE) and
-    joins NOTHING. The checkpoint itself stays: the flag relation is
-    consumed by both the admission aggregate and the admitted-set
-    join, and re-inlining interpreted higher-order token lambdas into
-    every downstream reference re-prices the corpus scan 5× (measured
-    at sf0.1: 11–16 s vs 6.5 s — the checkpointed form is the fast
-    one at every scale once >1 consumer exists). Downstream is
-    unchanged: exact-dedup hash-groupBy and the canonical_docs LSH
-    subtree on the ADMITTED set only (the whole point of
-    admission-first ordering: the expensive near-dup pass never sees
-    rejected docs). The certification layer is two 1-row aggregates, a
-    broadcast-of-1-row crossJoin, and stack() — 11 rows out at any
-    corpus size."""
+    joins NOTHING. The checkpoint stays: the flag relation is consumed
+    by both the admission aggregate and the admitted-set join, and
+    re-inlining interpreted higher-order token lambdas into every
+    downstream reference re-prices the corpus scan 5× (measured at
+    sf0.1: 11–16 s vs 6.5 s). Downstream, the exact-dedup survivors
+    and the canonical_docs LSH subtree see the ADMITTED set only (the
+    whole point of admission-first ordering: the expensive near-dup
+    pass never sees rejected docs). The certification layer is two
+    1-row aggregates, a broadcast-of-1-row crossJoin, and stack() — 11
+    rows out at any corpus size."""
     bl = DEFAULT_BLOCKLIST if blocklist is None else blocklist
-    # r15 (guide §2.3): the checkpointed flag relation also carries
-    # content_hash (exact_dedup's h64(text) key) and the quality
-    # composite — both row-level expressions of the SAME scan the
-    # flags already pay (the token subtree is shared with the gopher/
-    # classifier exprs and CSE'd), widening the checkpoint from ~11 to
-    # ~27 B/doc. That removes two further corpus-sized passes the
-    # former shape paid downstream: exact_dedup re-hashed the admitted
-    # corpus (a docs ⋈ flags join + text scan), and canonical_docs'
-    # quality_score re-expanded the whole survivors subtree. keep_ids
-    # is arithmetically exact_dedup(admitted)'s keep_id (same h64 key,
-    # same min(doc_id), identical admitted row set — the flag filter
-    # is row-level); quality enters canonical_docs through its
-    # precomputed-quality contract.
+    # the flag relation also carries content_hash (exact_dedup's
+    # h64(text) key) and the quality composite (~27 B/doc): both are
+    # row-level expressions of the scan the flags already pay, and they
+    # spare :func:`_dedup_certification` a re-hash of the admitted
+    # corpus and a re-tokenize of its survivors. The flag filter is
+    # row-level, so the admitted row set is exact_dedup's input.
     flags = docs.select(
         "doc_id",
         blocklist_pass_expr(bl).alias("bl"),
@@ -327,28 +312,8 @@ def corpus_ingest_e2e(
         F.sum((F.col("bl") & F.col("gop")).cast("long")).alias("n_gopher_pass"),
         F.sum((F.col("bl") & F.col("gop") & F.col("q")).cast("long")).alias("n_quality_pass"),
     )
-    admitted_f = flags.where(F.col("bl") & F.col("gop") & F.col("q"))
-    keep_ids = admitted_f.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-    survivors = docs.join(keep_ids.select("doc_id"), "doc_id")
-    canon = canonical_docs(
-        survivors,
-        threshold,
-        quality=admitted_f.join(keep_ids.select("doc_id"), "doc_id").select("doc_id", "quality"),
-    )
-    enriched = canon.withColumn("split", _split_col("cluster_id"))
-    tail = enriched.agg(
-        F.count(F.lit(1)).alias("n_exact_survivors"),
-        F.sum((F.col("cluster_size") >= 2).cast("long")).alias("n_near_dup_docs"),
-        F.count_distinct(
-            F.when(F.col("cluster_size") >= 2, F.col("cluster_id"))
-        ).alias("n_near_dup_clusters"),
-        F.sum(F.col("keep").cast("long")).alias("n_canonical_kept"),
-        F.sum((F.col("keep") & (F.col("split") == "train")).cast("long")).alias("n_train"),
-        F.sum((F.col("keep") & (F.col("split") == "validation")).cast("long")).alias(
-            "n_validation"
-        ),
-        F.sum((F.col("keep") & (F.col("split") == "test")).cast("long")).alias("n_test"),
-    )
+    admitted = flags.where(F.col("bl") & F.col("gop") & F.col("q"))
+    tail = _dedup_certification(docs, admitted, threshold)
     return admission.crossJoin(F.broadcast(tail)).selectExpr(
         """stack(11,
              'ing_00_input', n_input,

@@ -741,6 +741,13 @@ _PRIORITY = (
     "embedding_dedup_clusters",
     "translated_near_dups",
     "mr_wordcount",
+    "benchmark_overlap",
+    "dedup_clusters",
+    "leakage_safe_split",
+    "pagerank_dedup_graph",
+    "triangle_stats",
+    "ppjoin_pairs",
+    "dedup_recall_audit",
 )
 QUERIES = {k: QUERIES[k] for k in _PRIORITY} | QUERIES
 

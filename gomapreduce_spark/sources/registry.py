@@ -349,24 +349,7 @@ def write_hilbert_clustered(
     worst-case locality (no power-of-two seam jumps), which is why
     production table formats moved from ZORDER to Hilbert curves for
     their clustering implementations."""
-    keyed = with_hilbert_key(df, c1, c2, bits, out="_h")
-    sess = df.sparkSession
-    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    saved = sess.conf.get(key, None)
-    try:
-        sess.conf.set(key, "100000")
-        (
-            keyed.repartitionByRange(n_files, F.col("_h"))
-            .sortWithinPartitions("_h")
-            .drop("_h")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        if saved is None:
-            sess.conf.unset(key)
-        else:
-            sess.conf.set(key, saved)
+    _write_range_clustered(with_hilbert_key(df, c1, c2, bits, out="_h"), "_h", path, n_files)
 
 
 def write_zordered(
@@ -392,24 +375,32 @@ def write_zordered(
     at any input size while small-to-medium writers get exact,
     partitioning-independent bounds. Scoped save/restore — the session
     conf is never left mutated."""
-    keyed = df.withColumn("_z", zorder_key(c1, c2, bits))
-    sess = df.sparkSession
-    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    saved = sess.conf.get(key, None)
+    _write_range_clustered(df.withColumn("_z", zorder_key(c1, c2, bits)), "_z", path, n_files)
+
+
+def _write_range_clustered(keyed: DataFrame, key_col: str, path: str, n_files: int) -> None:
+    """Write ``keyed`` as ``n_files`` parquet files clustered on its
+    computed ``key_col``: one range shuffle + per-file sort, then the
+    key is dropped. The range sample is pinned to 100k points per
+    partition (see :func:`write_zordered`) under a scoped save/restore,
+    so the session conf is never left mutated."""
+    sess = keyed.sparkSession
+    conf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    saved = sess.conf.get(conf, None)
     try:
-        sess.conf.set(key, "100000")
+        sess.conf.set(conf, "100000")
         (
-            keyed.repartitionByRange(n_files, F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
+            keyed.repartitionByRange(n_files, F.col(key_col))
+            .sortWithinPartitions(key_col)
+            .drop(key_col)
             .write.mode("overwrite")
             .parquet(path)
         )
     finally:
         if saved is None:
-            sess.conf.unset(key)
+            sess.conf.unset(conf)
         else:
-            sess.conf.set(key, saved)
+            sess.conf.set(conf, saved)
 
 
 def write_dataset_manifest(path: str, order_col: str | None = None) -> dict:

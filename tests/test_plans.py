@@ -32,6 +32,35 @@ def test_source_overlap_shingle_pass_is_one_arrow_pass(spark, sf_med):
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
 
 
+def test_shingle_hashes_relation(spark):
+    """The (doc_id, n_sh, sh_h) relation the shingle-join operators
+    share sits behind each caller's checkpoint, where their plan gates
+    cannot see it: it must stay ONE Arrow pass, a doc shorter than n
+    tokens must contribute no rows, and n_sh must be the doc's number of
+    distinct shingles, with one row per distinct shingle."""
+    import re
+
+    from gomapreduce_spark.operators.dedup import _shingle_hashes
+    from tools.explain_audit import plan_str
+
+    docs = spark.createDataFrame(
+        [(1, "a b c a b c a b"), (2, "one two"), (3, ""), (4, "x y z w")],
+        "doc_id long, text string",
+    )
+    sh = _shingle_hashes(docs)
+    plan = plan_str(sh)
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
+    by_doc: dict[int, list] = {}
+    for r in sh.collect():
+        by_doc.setdefault(r["doc_id"], []).append(r)
+    # doc 1: six 3-grams, three distinct (a b c / b c a / c a b)
+    assert sorted(by_doc) == [1, 4]
+    for doc_id, n_distinct in ((1, 3), (4, 2)):
+        rows = by_doc[doc_id]
+        assert {r["n_sh"] for r in rows} == {n_distinct}
+        assert len(rows) == len({r["sh_h"] for r in rows}) == n_distinct
+
+
 def test_aqe_splits_skewed_join(spark):
     """The 100 TB skew story is AQE's OptimizeSkewedJoin, not manual
     salting alone: with a pathologically hot key and test-scale

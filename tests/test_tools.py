@@ -77,3 +77,23 @@ def test_oracle_priority_window():
     assert [q for q in _PRIORITY if q not in ORACLES] == []
     assert len(_PRIORITY) <= 50
     assert list(QUERIES)[: len(_PRIORITY)] == list(_PRIORITY)
+
+
+def test_masked_plan_dump_hides_only_volatile_ids():
+    """Two dumps of one plan differ in expression ids, exchange plan
+    ids, RDD numbers and UUIDs; masking removes exactly those, so a
+    before/after diff shows real plan changes only."""
+    from tools.dump_plan_files import masked
+
+    plan = (
+        "Output [2]: [doc_id#216L, sh_h#220L]\n"
+        "Arguments: [doc_id#216L], MapPartitionsRDD[71] at localCheckpoint, "
+        "[plan_id=1098] 3f2b8c1e-0a4d-4e7f-9b1c-2d3e4f5a6b7c"
+    )
+    rerun = (
+        "Output [2]: [doc_id#9L, sh_h#12L]\n"
+        "Arguments: [doc_id#9L], MapPartitionsRDD[5] at localCheckpoint, "
+        "[plan_id=7] 00000000-1111-2222-3333-444444444444"
+    )
+    assert masked(plan) == masked(rerun)
+    assert masked(plan) != masked(plan.replace("sh_h", "tok_h"))
